@@ -18,6 +18,13 @@ fan-out by arboricity instead of max degree (essential under power laws):
    left-join the full vertex set for zeros.
 
 Three shuffles total, all on edge keys; no iteration, no Python.
+
+The one action, the global ``count``, is planned statically
+(``plans.pregel.static_planning``): its inputs are persisted relations
+whose sizes the planner knows exactly, so adaptive re-planning at every
+stage only adds jobs (traced on a 40k-edge transcript graph: 5 jobs and
+about 2 s static against 15 jobs and 4–6.5 s under AQE). WCC star rounds make the
+opposite choice because their size estimates grow every round (wcc.py).
 """
 
 from __future__ import annotations
@@ -27,6 +34,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graph_data_science_spark.plans.pregel import static_planning
 from graph_data_science_spark.projection import ProjectedGraph
 
 
@@ -101,7 +109,8 @@ def triangle_count(graph: ProjectedGraph, max_degree: int | None = None) -> Tria
             .otherwise(F.col("triangles"))
             .alias("triangles"),
         )
-    global_count = tris.count()
+    with static_planning(graph.edges.sparkSession):
+        global_count = tris.count()
     return TriangleCountResult(per_node=per_node, triangles=tris, global_count=global_count)
 
 

@@ -22,10 +22,11 @@ go through a ``CheckpointStore`` every ``checkpoint_every`` supersteps.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 from graph_data_science_spark.plans.checkpoint import CheckpointStore
 
@@ -36,6 +37,35 @@ class PregelResult:
     iterations: int
     converged: bool
     metrics: list[dict] = field(default_factory=list)
+
+
+@contextmanager
+def static_planning(spark: SparkSession) -> Iterator[None]:
+    """Plan every query in the block once, with adaptive execution (AQE)
+    off; the caller's ``spark.sql.adaptive.enabled`` is restored on exit,
+    also on error.
+
+    AQE re-plans at every shuffle stage and submits each stage as its own
+    job, which pays only where the planner's size estimates are wrong.
+    """
+    key = "spark.sql.adaptive.enabled"
+    before = spark.conf.get(key, "true")
+    spark.conf.set(key, "false")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, before)
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of a ``localCheckpoint``-ed DataFrame.
+
+    ``DataFrame.unpersist`` only drops cache-manager entries and does
+    nothing here: a local checkpoint persists the RDD under its
+    ``LogicalRDD`` directly. Only call this once nothing will read ``df``
+    again; its lineage is truncated, so it cannot be recomputed.
+    """
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def _materialize(df: DataFrame, eager: bool = True) -> DataFrame:
@@ -83,33 +113,27 @@ def run_pregel(
     once, and intermediates are unpersisted after the block
     materializes.
     """
-    history: list[dict] = []
-    start_iter = 0
-    state = None
+    # Static planning for the whole loop: AQE's per-stage re-planning tax
+    # recurs every superstep (measured ~2x slower), and there is nothing
+    # for it to learn after superstep 0. Skew is handled semantically by
+    # hub salting (plans/messaging.py).
+    with static_planning(init_state.sparkSession):
+        history: list[dict] = []
+        start_iter = 0
+        state = None
 
-    # AQE re-plans and re-materializes stages per query; in a superstep loop
-    # that planning tax recurs every iteration and measured ~2× slower than
-    # static planning (the partition layout is identical across supersteps,
-    # so there is nothing for AQE to learn after superstep 0). Skew is
-    # handled semantically by hub salting (plans/messaging.py). Disable for
-    # the loop, restore after.
-    spark = init_state.sparkSession
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+        if checkpoint is not None and resume:
+            loaded = checkpoint.load_latest()
+            if loaded is not None:
+                state, start_iter, history = loaded
+                state = _materialize(state)
 
-    if checkpoint is not None and resume:
-        loaded = checkpoint.load_latest()
-        if loaded is not None:
-            state, start_iter, history = loaded
-            state = _materialize(state)
+        if state is None:
+            state = _materialize(init_state)
 
-    if state is None:
-        state = _materialize(init_state)
-
-    k = max(1, int(fused_supersteps))
-    converged = False
-    i = start_iter
-    try:
+        k = max(1, int(fused_supersteps))
+        converged = False
+        i = start_iter
         while i < max_iterations:
             chain = step_fn(state, i)
             steps_done = 1
@@ -145,7 +169,5 @@ def run_pregel(
             if done:
                 converged = True
                 break
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
 
     return PregelResult(state=state, iterations=i, converged=converged, metrics=history)

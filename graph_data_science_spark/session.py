@@ -31,6 +31,14 @@ def _default_driver_mem() -> str:
     return f"{max(8, min(16, int(total_gb * 0.4)))}g"
 
 
+def _usable_cores() -> int:
+    """Cores this process may run on (its CPU affinity set, which honours
+    taskset and container cpusets), not the host's total."""
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
 def get_spark(
     app_name: str = "spark-gds",
     master: str | None = None,
@@ -49,7 +57,7 @@ def get_spark(
       more sensitive to fixed shuffle width than one-shot ETL; the default
       200 thrashes small-scale runs and undershoots large clusters.
     """
-    cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cores = os.environ.get("SPARK_GRAFT_CPUS") or str(_usable_cores())
     if master is None:
         master = f"local[{cores}]"
     if shuffle_partitions is None:
@@ -75,7 +83,7 @@ def get_spark(
         # 8g caused GCLocker retry storms and 1.6× superstep slowdown at
         # 27M edges on the 128 GiB sandbox). Local mode = one JVM for
         # driver + executors, so size it like an executor: ~40% of physical
-        # RAM, clamped to [8g, 48g]; SPARK_GRAFT_DRIVER_MEM overrides.
+        # RAM, clamped to [8g, 16g]; SPARK_GRAFT_DRIVER_MEM overrides.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()))
     )
     for k, v in (extra_conf or {}).items():

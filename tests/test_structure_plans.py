@@ -1,0 +1,138 @@
+"""WCC star rounds and the triangle count: results against oracles on
+hub-heavy and long-chain graphs, checkpoint lifetime across calls, and the
+static-planning scope (the caller's AQE setting survives every exit)."""
+
+import random
+
+import pytest
+
+from graph_data_science_spark.algorithms.triangles import triangle_count
+from graph_data_science_spark.algorithms.wcc import wcc
+from graph_data_science_spark.plans.pregel import run_pregel
+from graph_data_science_spark.projection import project
+
+from tests import fixtures, oracles
+
+AQE = "spark.sql.adaptive.enabled"
+
+
+def _project(spark, nodes, edges, **kw):
+    df = fixtures.to_df_int(spark, nodes, edges)
+    nodes_df = spark.createDataFrame([(n,) for n in nodes], "id long")
+    return project(df, nodes=nodes_df, **kw)
+
+
+def _components_by_id(g, comp_df):
+    """Original id → original id of its component (the min member id)."""
+    orig = {r["vid"]: r["orig_id"] for r in g.nodes.collect()}
+    return {orig[r["vid"]]: orig[r["component"]] for r in comp_df.collect()}
+
+
+def _persisted(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_wcc_two_phase_powerlaw_hubs(spark):
+    # Hubs put hundreds of rows in one window partition of a star round.
+    nodes, edges = fixtures.powerlaw(400, 1200, seed=5)
+    g = _project(spark, nodes, edges)
+    res = wcc(g, algorithm="two_phase")
+    assert _components_by_id(g, res.components) == oracles.wcc_oracle(nodes, edges)
+
+
+def test_wcc_two_phase_long_chain(spark):
+    # A 240-node path with shuffled ids: many star rounds before the
+    # fingerprint stops changing.
+    ids = list(range(240))
+    random.Random(3).shuffle(ids)
+    edges = [(a, b, 1.0) for a, b in zip(ids, ids[1:])]
+    g = _project(spark, ids, edges)
+    res = wcc(g, algorithm="two_phase")
+    assert res.iterations > 3
+    assert _components_by_id(g, res.components) == oracles.wcc_oracle(ids, edges)
+
+
+def test_wcc_two_phase_without_edges(spark):
+    # Every edge is under the threshold: the observed fingerprint of an
+    # empty round must still arrive, and each node is its own component.
+    nodes, edges = [1, 2, 3], [(1, 2, 1.0), (2, 3, 1.0)]
+    g = _project(spark, nodes, edges)
+    res = wcc(g, threshold=5.0, with_stats=True)
+    assert _components_by_id(g, res.components) == {1: 1, 2: 2, 3: 3}
+    assert res.component_count == 3
+
+
+def test_wcc_keeps_only_its_last_round(spark):
+    nodes, edges = fixtures.gnm(150, 200, seed=9)
+    g = _project(spark, nodes, edges)
+    expected = oracles.wcc_oracle(nodes, edges)
+    results = []
+    for _ in range(2):
+        before = _persisted(spark)
+        results.append(wcc(g, algorithm="two_phase"))
+        assert len(_persisted(spark) - before) <= 1
+    # The kept round is what each lazy result reads.
+    for res in results:
+        assert _components_by_id(g, res.components) == expected
+
+
+def test_triangle_count_powerlaw_undirected(spark):
+    nodes, edges = fixtures.powerlaw(200, 900, seed=13)
+    g = _project(spark, nodes, edges, orientation="UNDIRECTED")
+    res = triangle_count(g)
+    per, total = oracles.triangles_oracle(nodes, edges)
+    orig = {r["vid"]: r["orig_id"] for r in g.nodes.collect()}
+    assert {orig[r["vid"]]: r["triangles"] for r in res.per_node.collect()} == per
+    assert res.global_count == total > 0
+
+
+@pytest.mark.parametrize("aqe", ["true", "false"])
+def test_triangle_count_restores_aqe(spark, aqe, monkeypatch):
+    nodes, edges = fixtures.two_triangles_bridge()
+    ids = {n: i for i, n in enumerate(nodes)}
+    edges = [(ids[s], ids[d], w) for s, d, w in edges]
+    g = _project(spark, list(ids.values()), edges, orientation="UNDIRECTED")
+    spark.conf.set(AQE, aqe)
+    try:
+        assert triangle_count(g).global_count == 2
+        assert spark.conf.get(AQE) == aqe
+
+        seen = []
+
+        def failing_count(df):
+            seen.append(spark.conf.get(AQE))
+            raise RuntimeError("count failed")
+
+        monkeypatch.setattr(type(g.edges), "count", failing_count)
+        with pytest.raises(RuntimeError, match="count failed"):
+            triangle_count(g)
+        assert seen == ["false"]
+        assert spark.conf.get(AQE) == aqe
+    finally:
+        spark.conf.set(AQE, "true")
+
+
+@pytest.mark.parametrize("aqe", ["true", "false"])
+def test_run_pregel_restores_aqe(spark, aqe):
+    init = spark.range(5).selectExpr("id AS vid", "0 AS x")
+    seen = []
+
+    def step(state, i):
+        seen.append(spark.conf.get(AQE))
+        return state.selectExpr("vid", "x + 1 AS x")
+
+    def failing_step(state, i):
+        seen.append(spark.conf.get(AQE))
+        raise RuntimeError("step failed")
+
+    spark.conf.set(AQE, aqe)
+    try:
+        res = run_pregel(init, step, max_iterations=2)
+        assert res.iterations == 2
+        assert spark.conf.get(AQE) == aqe
+        with pytest.raises(RuntimeError, match="step failed"):
+            run_pregel(init, failing_step, max_iterations=2)
+        assert spark.conf.get(AQE) == aqe
+        assert seen == ["false"] * 3
+    finally:
+        spark.conf.set(AQE, "true")

@@ -34,14 +34,14 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from graph_data_science_spark.plans.messaging import EdgePlan
+    from graph_data_science_spark.plans.pregel import release_checkpoint, static_planning
     from graph_data_science_spark.projection import project
     from graph_data_science_spark.session import get_spark
     from graph_data_science_spark.sources.edges import derive_edges
     from graph_data_science_spark.sources.transcripts import generate_transcripts
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(app_name="profile-superstep", master=f"local[{cpus}]",
-                      shuffle_partitions=int(cpus))
+    spark = get_spark(app_name="profile-superstep")
+    cpus = spark.sparkContext.defaultParallelism
     t0 = time.time()
     transcripts = generate_transcripts(
         spark, n_convs=n_convs, n_tools=max(20, n_convs // 2000), seed=42
@@ -74,26 +74,24 @@ def main() -> None:
             F.abs(new_rank - F.col("rank")).alias("delta"),
         )
 
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    state = init.localCheckpoint(eager=True)
     rows = []
-    for i in range(iters):
-        t0 = time.time()
-        chain = step(state, i)
-        t_build = time.time() - t0
-        t0 = time.time()
-        chain._jdf.queryExecution().executedPlan()
-        t_plan = time.time() - t0
-        t0 = time.time()
-        new_state = chain.localCheckpoint(eager=True)
-        t_exec = time.time() - t0
-        state.unpersist()
-        state = new_state
-        rows.append((t_build, t_plan, t_exec))
-        print(f"superstep {i:2d}: build={t_build*1000:7.1f}ms plan={t_plan*1000:7.1f}ms "
-              f"exec={t_exec*1000:8.1f}ms", flush=True)
-    spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
+    with static_planning(spark):
+        state = init.localCheckpoint(eager=True)
+        for i in range(iters):
+            t0 = time.time()
+            chain = step(state, i)
+            t_build = time.time() - t0
+            t0 = time.time()
+            chain._jdf.queryExecution().executedPlan()
+            t_plan = time.time() - t0
+            t0 = time.time()
+            new_state = chain.localCheckpoint(eager=True)
+            t_exec = time.time() - t0
+            release_checkpoint(state)
+            state = new_state
+            rows.append((t_build, t_plan, t_exec))
+            print(f"superstep {i:2d}: build={t_build*1000:7.1f}ms plan={t_plan*1000:7.1f}ms "
+                  f"exec={t_exec*1000:8.1f}ms", flush=True)
 
     n = len(rows)
     print(f"\nmeans over {n} supersteps at {g.edge_count:,} edges, local[{cpus}]:")
