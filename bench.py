@@ -133,16 +133,6 @@ def run_bench(
     # supersteps; the headline is edges/s at the MEDIAN total wall, with
     # every repeat published inline so BENCH_rN vs rN-1 is comparable
     # without a noise argument.
-    #
-    # fused_supersteps: measured round-4 A/B at 27M edges (same host
-    # window, fresh JVMs, alternating): fused=4 is FASTER at local[8]
-    # (85.6 vs 100.3 s — fewer driver barriers when compute-bound) but
-    # SLOWER at local[32] (71.0 vs 53.3/66.4 s — the 4-superstep-deep
-    # in-job DAG keeps 4 shuffle pipelines' buffers live across 32
-    # threads in one heap). Production target is the high-parallelism
-    # cluster, so the fixed-iteration default is 1; fused stays available
-    # for driver-bound low-parallelism deployments.
-    fused = int(os.environ.get("SPARK_GRAFT_BENCH_FUSED", "1"))
     track = os.environ.get("SPARK_GRAFT_BENCH_METRICS", "1") != "0"
     executor = os.environ.get("SPARK_GRAFT_BENCH_EXECUTOR", "relational")
     repeats = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3")))
@@ -155,14 +145,12 @@ def run_bench(
         kw = {"executor": "csr"}
     t_plan = time.time() - t0
     t0 = time.time()
-    page_rank(g, tolerance=0.0, max_iterations=2,
-              fused_supersteps=fused, track_metrics=track, **kw)
+    page_rank(g, tolerance=0.0, max_iterations=2, track_metrics=track, **kw)
     t_warm = time.time() - t0
     runs: list[float] = []
     for _ in range(repeats):
         t0 = time.time()
-        page_rank(g, tolerance=0.0, max_iterations=pr_supersteps,
-                  fused_supersteps=fused, track_metrics=track, **kw)
+        page_rank(g, tolerance=0.0, max_iterations=pr_supersteps, track_metrics=track, **kw)
         runs.append(round(time.time() - t0, 3))
     if plan is not None:
         plan.unpersist()
@@ -196,7 +184,6 @@ def run_bench(
         "edge_cache_hit": cache_hit,
         "proj_cache_hit": proj_hit,
         "warm_sec": round(t_warm, 3),
-        "fused_supersteps": fused,
         "executor": executor,
         "suite_total_sec": round(sum(timings.values()), 3),
     }
@@ -206,7 +193,7 @@ def run_bench(
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     bench_convs = int(os.environ.get("SPARK_GRAFT_BENCH_CONVS", "100000"))
     include_suite = os.environ.get("SPARK_GRAFT_BENCH_SUITE", "1") != "0"
     supersteps = int(os.environ.get("SPARK_GRAFT_BENCH_SUPERSTEPS", "10"))

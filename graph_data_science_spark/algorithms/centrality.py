@@ -65,12 +65,9 @@ def article_rank(
             F.abs(new_rank - F.col("rank")).alias("delta"),
         )
 
-    def metrics(state: DataFrame, i: int) -> dict:
-        row = state.agg(F.max("delta").alias("d")).collect()[0]
-        return {"max_delta": float(row["d"] if row["d"] is not None else 0.0)}
-
     res = run_pregel(
-        init, step, max_iterations=max_iterations, metrics_fn=metrics,
+        init, step, max_iterations=max_iterations,
+        metrics={"max_delta": F.coalesce(F.max("delta"), F.lit(0.0))},
         stop_fn=lambda m, i: m["max_delta"] < tolerance,
     )
     plan.unpersist()
@@ -111,12 +108,9 @@ def eigenvector(
             "vid", new_rank.alias("rank"), F.abs(new_rank - F.col("old")).alias("delta")
         )
 
-    def metrics(state: DataFrame, i: int) -> dict:
-        row = state.agg(F.max("delta").alias("d")).collect()[0]
-        return {"max_delta": float(row["d"] if row["d"] is not None else 0.0)}
-
     res = run_pregel(
-        init, step, max_iterations=max_iterations, metrics_fn=metrics,
+        init, step, max_iterations=max_iterations,
+        metrics={"max_delta": F.coalesce(F.max("delta"), F.lit(0.0))},
         stop_fn=lambda m, i: m["max_delta"] < tolerance,
     )
     plan.unpersist()
@@ -178,12 +172,9 @@ def hits(
             ).alias("delta"),
         )
 
-    def metrics(state: DataFrame, i: int) -> dict:
-        row = state.agg(F.max("delta").alias("d")).collect()[0]
-        return {"max_delta": float(row["d"] if row["d"] is not None else 0.0)}
-
     res = run_pregel(
-        init, step, max_iterations=max_iterations, metrics_fn=metrics,
+        init, step, max_iterations=max_iterations,
+        metrics={"max_delta": F.coalesce(F.max("delta"), F.lit(0.0))},
         stop_fn=lambda m, i: m["max_delta"] < tolerance,
     )
     fwd.unpersist()

@@ -48,14 +48,11 @@ def _longest_relax(graph: ProjectedGraph, weighted: bool, max_rounds: int) -> Da
             (grown > F.col("level")).cast("int").alias("changed"),
         )
 
-    def metrics(state: DataFrame, i: int) -> dict:
-        return {"changed": int(state.agg(F.sum("changed")).collect()[0][0] or 0)}
-
     res = run_pregel(
         init,
         step,
         max_iterations=max_rounds,
-        metrics_fn=metrics,
+        metrics={"changed": F.coalesce(F.sum("changed"), F.lit(0))},
         stop_fn=lambda m, i: m["changed"] == 0,
     )
     plan.unpersist()

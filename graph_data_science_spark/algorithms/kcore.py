@@ -75,11 +75,9 @@ def k_core(graph: ProjectedGraph, max_iterations: int = 100) -> KCoreResult:
             (new_core < F.col("core")).cast("int").alias("changed"),
         )
 
-    def metrics(state: DataFrame, i: int) -> dict:
-        return {"changed": int(state.agg(F.sum("changed")).collect()[0][0] or 0)}
-
     res = run_pregel(
-        init, step, max_iterations=max_iterations, metrics_fn=metrics,
+        init, step, max_iterations=max_iterations,
+        metrics={"changed": F.coalesce(F.sum("changed"), F.lit(0))},
         stop_fn=lambda m, i: m["changed"] == 0,
     )
     edges.unpersist()

@@ -103,14 +103,11 @@ def label_propagation(
             )
         )
 
-    def metrics(state: DataFrame, i: int) -> dict:
-        return {"changed": int(state.agg(F.sum("changed")).collect()[0][0] or 0)}
-
     res = run_pregel(
         init,
         step,
         max_iterations=max_iterations,
-        metrics_fn=metrics,
+        metrics={"changed": F.coalesce(F.sum("changed"), F.lit(0))},
         stop_fn=lambda m, i: m["changed"] == 0,
     )
     if csr is not None:

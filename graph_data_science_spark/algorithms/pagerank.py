@@ -92,7 +92,6 @@ def page_rank(
     checkpoint: CheckpointStore | None = None,
     checkpoint_every: int = 5,
     executor: str = "relational",
-    fused_supersteps: int = 1,
     track_metrics: bool = True,
 ) -> PageRankResult:
     """``executor``: 'relational' (state⋈edges join, the correctness
@@ -101,9 +100,9 @@ def page_rank(
     (cross-checked in tests).
 
     ``track_metrics=False`` (fixed-iteration runs only, tolerance ≤ 0)
-    skips the per-superstep delta/mass aggregate — that collect is a full
-    extra Spark job per superstep of pure driver-serial time, the main
-    Amdahl term in scaling runs where convergence is not being watched."""
+    only skips the per-superstep convergence aggregate (max delta, rank
+    sum). It saves no Spark job: the aggregate is observed on the
+    checkpoint that materializes each superstep."""
     csr = None
     if executor == "csr":
         from graph_data_science_spark.plans.csr import CsrPlan
@@ -163,27 +162,19 @@ def page_rank(
             )
         )
 
-    def metrics(state: DataFrame, i: int) -> dict:
-        row = state.agg(
-            F.max("delta").alias("max_delta"), F.sum("rank").alias("rank_sum")
-        ).collect()[0]
-        # empty vertex set (empty projection) → aggregates are NULL
-        return {
-            "max_delta": float(row["max_delta"] if row["max_delta"] is not None else 0.0),
-            "rank_sum": float(row["rank_sum"] if row["rank_sum"] is not None else 0.0),
-        }
-
     if not track_metrics and tolerance > 0:
         raise ValueError("track_metrics=False requires tolerance <= 0 (fixed iterations)")
     res = run_pregel(
         init,
         step,
         max_iterations=max_iterations,
-        metrics_fn=metrics if track_metrics else None,
+        metrics={
+            "max_delta": F.coalesce(F.max("delta"), F.lit(0.0)),
+            "rank_sum": F.coalesce(F.sum("rank"), F.lit(0.0)),
+        } if track_metrics else None,
         stop_fn=(lambda m, i: m["max_delta"] < tolerance) if track_metrics else None,
         checkpoint=checkpoint,
         checkpoint_every=checkpoint_every,
-        fused_supersteps=fused_supersteps,
     )
     scores = _scale(res.state.select("vid", F.col("rank").alias("score")), scaler)
     if csr is not None:

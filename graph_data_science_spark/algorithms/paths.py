@@ -114,14 +114,11 @@ def _relax(
             (better < F.col("dist")).cast("int").alias("changed"),
         )
 
-    def metrics(state: DataFrame, i: int) -> dict:
-        return {"changed": int(state.agg(F.sum("changed")).collect()[0][0] or 0)}
-
     res = run_pregel(
         init,
         step,
         max_iterations=max_iterations,
-        metrics_fn=metrics,
+        metrics={"changed": F.coalesce(F.sum("changed"), F.lit(0))},
         stop_fn=lambda m, i: m["changed"] == 0,
     )
     if edge_plan is None:
@@ -616,22 +613,21 @@ def astar(
             (better < F.col("dist")).cast("int").alias("changed"),
         )
 
-    def metrics(state: DataFrame, i: int) -> dict:
-        row = state.agg(
-            F.sum("changed").alias("c"),
-            F.min(F.when(F.col("vid") == tvid, F.col("dist"))).alias("t"),
-        ).collect()[0]
-        t = row["t"]
-        if t is not None and t < bound["b"]:
-            bound["b"] = float(t)
-        return {"changed": int(row["c"] or 0), "target_dist": bound["b"]}
+    def stop(m: dict, i: int) -> bool:
+        bound["b"] = min(bound["b"], m["target_dist"])
+        return m["changed"] == 0
 
     res = run_pregel(
         init,
         step,
         max_iterations=max_iterations,
-        metrics_fn=metrics,
-        stop_fn=lambda m, i: m["changed"] == 0,
+        metrics={
+            "changed": F.coalesce(F.sum("changed"), F.lit(0)),
+            "target_dist": F.coalesce(
+                F.min(F.when(F.col("vid") == tvid, F.col("dist"))), F.lit(_INF)
+            ),
+        },
+        stop_fn=stop,
     )
     plan.unpersist()
     if bound["b"] == _INF:

@@ -99,14 +99,11 @@ def _voronoi(
             )
         )
 
-    def metrics(state: DataFrame, i: int) -> dict:
-        return {"changed": int(state.agg(F.sum("changed")).collect()[0][0] or 0)}
-
     res = run_pregel(
         init,
         step,
         max_iterations=max_iterations,
-        metrics_fn=metrics,
+        metrics={"changed": F.coalesce(F.sum("changed"), F.lit(0))},
         stop_fn=lambda m, i: m["changed"] == 0,
     )
     settled = res.state.filter(F.col("dist") < _INF).select("vid", "dist", "term", "is_t")

@@ -44,11 +44,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.plans.messaging import EdgePlan
-from graph_data_science_spark.plans.pregel import release_checkpoint, run_pregel
+from graph_data_science_spark.plans.pregel import observed_checkpoint, release_checkpoint, run_pregel
 from graph_data_science_spark.projection import ProjectedGraph, assign_dense_ids
 
 
@@ -110,15 +110,12 @@ def _small_star(canon: DataFrame) -> DataFrame:
 def _checkpoint(canon: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
     """Materialize one round and return it with its (count, hash)
     fingerprint, observed in the same Spark action."""
-    obs = Observation()
     # bit_xor: order-insensitive and overflow-free (ANSI mode forbids a
     # wrapping sum of hashes — verified failure at a few hundred edges).
-    done = canon.observe(
-        obs,
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)).alias("h"),
-    ).localCheckpoint(eager=True)
-    fp = obs.get
+    done, fp = observed_checkpoint(
+        canon,
+        {"n": F.count(F.lit(1)), "h": F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0))},
+    )
     return done, (int(fp["n"]), int(fp["h"]))
 
 
@@ -181,14 +178,11 @@ def _wcc_propagation(
             (new_label < F.col("label")).cast("int").alias("changed"),
         )
 
-    def metrics(state: DataFrame, i: int) -> dict:
-        return {"changed": state.agg(F.sum("changed")).collect()[0][0] or 0}
-
     res = run_pregel(
         init,
         step,
         max_iterations=max_rounds,
-        metrics_fn=metrics,
+        metrics={"changed": F.coalesce(F.sum("changed"), F.lit(0))},
         stop_fn=lambda m, i: m["changed"] == 0,
     )
     plan.unpersist()

@@ -23,16 +23,9 @@ of labor (salt the join, trust the combiner) is SURVEY.md §4.1.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
-
-# A/B knob for scaling benchmarks only: SPARK_GRAFT_EDGE_SORT=0 rebuilds the
-# round-4 unsorted edge cache (per-superstep SMJ re-sort) for controlled
-# comparison cells. Production default is sorted (1).
-_SORT_CACHE = os.environ.get("SPARK_GRAFT_EDGE_SORT", "1") != "0"
 
 
 class EdgePlan:
@@ -80,14 +73,16 @@ class EdgePlan:
             # steady-state plan: `Sort [_src ASC]` above the
             # InMemoryTableScan), re-sorting 27M-273M rows per iteration
             # for nothing. One sort at plan build, zero thereafter.
-            cache = edges.select(
-                F.col("src").alias("_src"),
-                F.col("dst").alias("_dst"),
-                F.col("weight").alias("_weight"),
-            ).repartition(self.num_partitions, "_src")
-            if _SORT_CACHE:
-                cache = cache.sortWithinPartitions("_src")
-            self.edges = cache.persist(StorageLevel.MEMORY_AND_DISK)
+            self.edges = (
+                edges.select(
+                    F.col("src").alias("_src"),
+                    F.col("dst").alias("_dst"),
+                    F.col("weight").alias("_weight"),
+                )
+                .repartition(self.num_partitions, "_src")
+                .sortWithinPartitions("_src")
+                .persist(StorageLevel.MEMORY_AND_DISK)
+            )
             self.edge_count = self.edges.count()
             return
 
@@ -110,10 +105,9 @@ class EdgePlan:
                 .alias("_salt"),
             )
             .repartition(self.num_partitions, "_src", "_salt")
+            .sortWithinPartitions("_src", "_salt")
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        if _SORT_CACHE:
-            salted = salted.sortWithinPartitions("_src", "_salt")
-        salted = salted.persist(StorageLevel.MEMORY_AND_DISK)
         self.edge_count = salted.count()  # materialize once; supersteps reuse
         self.edges = salted
 

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from graph_data_science_spark.algorithms.labelprop import label_propagation
 from graph_data_science_spark.algorithms.pagerank import page_rank
-from graph_data_science_spark.algorithms.scc import scc
+from graph_data_science_spark.algorithms.scc import _fixpoint_min, scc
 from graph_data_science_spark.algorithms.triangles import (
     local_clustering_coefficient,
     triangle_count,
@@ -138,6 +138,33 @@ def test_scc_two_cycles_bridged(spark):
     g = _project(spark, nodes, edges)
     got = _canonical_components(g, scc(g).components)
     assert got == {"a": "a", "b": "a", "c": "a", "d": "d", "e": "d", "f": "d"}
+
+
+def test_scc_bridge_into_lower_cycle_needs_two_rounds(spark):
+    # d, e, f reach a's cycle, so all six share color a; the mark from a
+    # assigns only a, b, c, and d, e, f take a second outer round.
+    nodes = list("abcdef")
+    edges = [
+        ("a", "b", 1.0), ("b", "c", 1.0), ("c", "a", 1.0),
+        ("d", "a", 1.0),
+        ("d", "e", 1.0), ("e", "f", 1.0), ("f", "d", 1.0),
+    ]
+    g = _project(spark, nodes, edges)
+    res = scc(g)
+    assert res.outer_rounds == 2
+    assert _canonical_components(g, res.components) == oracles.scc_oracle(nodes, edges)
+    with pytest.raises(RuntimeError, match="max_outer_rounds=1"):
+        scc(g, max_outer_rounds=1)
+
+
+def test_scc_fixpoint_raises_at_its_cap(spark):
+    # On the path 3→2→1→0 label 0 reaches node 3 in superstep 3, and
+    # superstep 4 is the first without a change.
+    labels = spark.createDataFrame([(v, v, 1) for v in range(4)], "vid long, label long, chg int")
+    edges = spark.createDataFrame([(v + 1, v) for v in range(3)], "src long, dst long")
+    with pytest.raises(RuntimeError, match="max_rounds=3"):
+        _fixpoint_min(labels, edges, max_rounds=3)
+    assert {r["label"] for r in _fixpoint_min(labels, edges, max_rounds=4).collect()} == {0}
 
 
 # ---------------------------------------------------------------- LPA

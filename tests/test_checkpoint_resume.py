@@ -116,29 +116,3 @@ def test_corrupt_checkpoint_detected(spark, graph, tmp_path):
     with pytest.raises(ValueError, match="corrupt"):
         store2.load_latest()
 
-
-def test_fused_supersteps_identical_and_share_computation(spark):
-    """fused_supersteps=k must give bit-identical results to k=1 (the
-    lazy-localCheckpoint sharing added in r3 changes the execution plan,
-    never the values)."""
-    from pyspark.sql import functions as F
-    from graph_data_science_spark.algorithms.pagerank import page_rank
-    from graph_data_science_spark.projection import project
-    from tests import fixtures
-
-    nodes, edges = fixtures.gnm(n=40, m=160, seed=33)
-    df = spark.createDataFrame(
-        [(str(s), str(d), 1.0) for s, d, _ in edges], ["src", "dst", "weight"]
-    )
-    g = project(df, name="fused_t")
-    r1 = page_rank(g, tolerance=0.0, max_iterations=9, fused_supersteps=1)
-    r3 = page_rank(g, tolerance=0.0, max_iterations=9, fused_supersteps=3)
-    a = {r["vid"]: r["score"] for r in r1.scores.collect()}
-    b = {r["vid"]: r["score"] for r in r3.scores.collect()}
-    assert a == b  # bit-for-bit
-    # metrics-off fixed-iteration mode composes with fusing
-    r3m = page_rank(
-        g, tolerance=0.0, max_iterations=9, fused_supersteps=3, track_metrics=False
-    )
-    c = {r["vid"]: r["score"] for r in r3m.scores.collect()}
-    assert a == c

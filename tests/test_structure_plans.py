@@ -1,11 +1,16 @@
 """WCC star rounds and the triangle count: results against oracles on
-hub-heavy and long-chain graphs, checkpoint lifetime across calls, and the
+hub-heavy and long-chain graphs. The superstep loop: observed metrics,
+checkpoint lifetime across calls of every algorithm built on it, and the
 static-planning scope (the caller's AQE setting survives every exit)."""
 
 import random
 
 import pytest
+from pyspark.sql import functions as F
 
+from graph_data_science_spark.algorithms.labelprop import label_propagation
+from graph_data_science_spark.algorithms.pagerank import page_rank
+from graph_data_science_spark.algorithms.scc import scc
 from graph_data_science_spark.algorithms.triangles import triangle_count
 from graph_data_science_spark.algorithms.wcc import wcc
 from graph_data_science_spark.plans.pregel import run_pregel
@@ -74,6 +79,71 @@ def test_wcc_keeps_only_its_last_round(spark):
     # The kept round is what each lazy result reads.
     for res in results:
         assert _components_by_id(g, res.components) == expected
+
+
+@pytest.mark.parametrize(
+    "run",
+    [
+        lambda g: page_rank(g, max_iterations=5).scores,
+        lambda g: page_rank(g, max_iterations=5, executor="csr").scores,
+        lambda g: label_propagation(g).labels,
+        lambda g: wcc(g, algorithm="propagation").components,
+        lambda g: scc(g).components,
+    ],
+    ids=["pagerank", "pagerank_csr", "labelprop", "wcc_propagation", "scc"],
+)
+def test_superstep_algorithms_keep_one_checkpoint(spark, run):
+    nodes, edges = fixtures.powerlaw(300, 900, seed=11)
+    g = _project(spark, nodes, edges)
+    results = []
+    for _ in range(2):
+        before = _persisted(spark)
+        results.append(run(g))
+        assert len(_persisted(spark) - before) <= 1
+    first, second = ({tuple(r) for r in res.collect()} for res in results)
+    assert len(first) == len(nodes)
+    assert first == second
+
+
+def test_run_pregel_observes_metrics_on_empty_state(spark):
+    init = spark.createDataFrame([], "vid long, x int")
+    res = run_pregel(
+        init,
+        lambda state, i: state.selectExpr("vid", "x + 1 AS x"),
+        max_iterations=5,
+        metrics={"total": F.coalesce(F.sum("x"), F.lit(0))},
+        stop_fn=lambda m, i: m["total"] == 0,
+    )
+    assert (res.iterations, res.converged) == (1, True)
+    assert res.metrics == [{"total": 0, "superstep": 0}]
+
+
+def test_run_pregel_metric_history_and_stop(spark):
+    # x counts down from vid to 0: after superstep i the largest x is
+    # 3 - i, and the first state with no positive x follows superstep 3.
+    init = spark.range(5).selectExpr("id AS vid", "CAST(id AS INT) AS x")
+    stops = []
+
+    def stop(m, i):
+        stops.append(i)
+        return m["positive"] == 0
+
+    res = run_pregel(
+        init,
+        lambda state, i: state.selectExpr("vid", "greatest(x - 1, 0) AS x"),
+        max_iterations=10,
+        metrics={
+            "top": F.coalesce(F.max("x"), F.lit(0)),
+            "positive": F.coalesce(F.sum((F.col("x") > 0).cast("int")), F.lit(0)),
+        },
+        stop_fn=stop,
+    )
+    assert res.metrics == [
+        {"top": 3 - i, "positive": 3 - i, "superstep": i} for i in range(4)
+    ]
+    assert stops == [0, 1, 2, 3]
+    assert (res.iterations, res.converged) == (4, True)
+    assert res.state.agg(F.max("x")).collect()[0][0] == 0
 
 
 def test_triangle_count_powerlaw_undirected(spark):

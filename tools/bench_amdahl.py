@@ -45,7 +45,6 @@ def run_at(cpus: int, n_convs: int, supersteps: int) -> dict:
         SPARK_GRAFT_BENCH_SUITE="0",
         SPARK_GRAFT_BENCH_REPEATS="1",
     )
-    env.setdefault("SPARK_GRAFT_BENCH_FUSED", "1")
     env.setdefault("SPARK_GRAFT_BENCH_METRICS", "0")
     # same derived-edge/projection cache as bench_scaling.py: every cell
     # reads the identical parquet instead of re-running the untimed
@@ -114,7 +113,7 @@ def main() -> None:
 ## Amdahl decomposition (parallelism sweep {CPUS}, {out['date']})
 
 Per-cell minima over {repeats} alternating fresh-JVM repeats, identical
-{graph['edges']:,}-edge input, fused=1 / metrics off:
+{graph['edges']:,}-edge input, metrics off:
 
 | parallelism | runs (s) | min (s) |
 |---|---|---|

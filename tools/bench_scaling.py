@@ -16,12 +16,10 @@ Methodology (round 3 — learned from BENCH/matrix.json):
   answer to one-sided noise). The median is reported alongside.
 - Repeats ALTERNATE parallelism (8, 32, 8, 32, …) so slow phases of the
   host hit both cells equally instead of biasing one.
-- The headline config uses the engine's production superstep settings
-  for fixed-iteration runs: fused_supersteps=4 (4 supersteps per
-  materialized job — identical results, 4× fewer scheduling barriers)
-  and track_metrics=off (no per-superstep convergence collect). Both are
-  documented engine features, not bench-only hacks; override via
-  SPARK_GRAFT_BENCH_FUSED / SPARK_GRAFT_BENCH_METRICS.
+- The headline config runs fixed-iteration PageRank with
+  track_metrics=off (no per-superstep convergence aggregate), a
+  documented engine feature, not a bench-only hack; override via
+  SPARK_GRAFT_BENCH_METRICS.
 
 APPEND-ONLY since round 5: this tool NEVER touches BENCH/BASELINE.md
 (a round-4 rerun once regenerated it and deleted the A/B + Amdahl +
@@ -52,14 +50,7 @@ def run_at(cpus: int, n_convs: int, supersteps: int) -> dict:
         SPARK_GRAFT_BENCH_SUPERSTEPS=str(supersteps),
         SPARK_GRAFT_BENCH_SUITE="0",  # throughput section only
     )
-    # fused=1: the round-4 A/B (bench.py comment) measured fused=4 faster
-    # at local[8] but 20-30% slower at local[32] — the deep fused DAG
-    # holds 4 shuffle pipelines' buffers live in one heap. The production
-    # (high-parallelism) default is therefore 1; the round-3 recompute
-    # fix (pregel.py lazy localCheckpoint of fused links) remains in and
-    # parity-tested for deployments that opt in.
-    # metrics-off removes the per-superstep convergence collect job.
-    env.setdefault("SPARK_GRAFT_BENCH_FUSED", "1")
+    # metrics-off removes the per-superstep convergence aggregate.
     env.setdefault("SPARK_GRAFT_BENCH_METRICS", "0")
     # fresh-JVM repeats are the OUTER loop here; one timed run per process
     env.setdefault("SPARK_GRAFT_BENCH_REPEATS", "1")
@@ -113,7 +104,7 @@ def main() -> None:
     rows32 = ", ".join(f"{v}" for v in t32_all)
     stamp = datetime.datetime.now().strftime("%Y%m%d_%H%M%S")
     md = f"""
-## Run {stamp} — {n_convs:,} convs, {supersteps} supersteps, {repeats}×2 cells (fused=1, metrics off)
+## Run {stamp} — {n_convs:,} convs, {supersteps} supersteps, {repeats}×2 cells (metrics off)
 
 Graph: {g['nodes']:,} nodes, {g['edges']:,} edges.
 
