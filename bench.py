@@ -67,7 +67,7 @@ def run_bench(
             timings[name] = round(time.time() - t0, 3)
 
     # North-rule throughput: transcripts -> edges -> project -> PageRank.
-    from graph_data_science_spark.plans.messaging import EdgePlan
+    from graph_data_science_spark.plans.messaging import gather_plan
 
     # Optional derived-edge cache (SPARK_GRAFT_BENCH_EDGE_CACHE=<dir>): the
     # transcript generator is deterministic (seed 42), so the derived edge
@@ -128,7 +128,7 @@ def run_bench(
     # Headline metric (round-4 redesign per the round-3 verdict): the old
     # marginal-superstep number was a DIFFERENCE of two short walls, which
     # doubles host-noise variance — irreproducible run to run. Instead:
-    # ONE shared pre-built EdgePlan + one 2-superstep warm run (JIT, cache
+    # ONE shared pre-built gather plan + one 2-superstep warm run (JIT, cache
     # touch), then ``repeats`` (≥3) timed full runs of ``pr_supersteps``
     # supersteps; the headline is edges/s at the MEDIAN total wall, with
     # every repeat published inline so BENCH_rN vs rN-1 is comparable
@@ -137,23 +137,19 @@ def run_bench(
     executor = os.environ.get("SPARK_GRAFT_BENCH_EXECUTOR", "relational")
     repeats = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3")))
     t0 = time.time()
-    if executor == "relational":
-        plan = EdgePlan(g.edges)
-        kw = {"edge_plan": plan}
-    else:  # csr: page_rank builds its CsrPlan internally per call
-        plan = None
-        kw = {"executor": "csr"}
+    plan = gather_plan(g.edges, g.node_count, executor)
     t_plan = time.time() - t0
     t0 = time.time()
-    page_rank(g, tolerance=0.0, max_iterations=2, track_metrics=track, **kw)
+    page_rank(g, tolerance=0.0, max_iterations=2, track_metrics=track, edge_plan=plan)
     t_warm = time.time() - t0
     runs: list[float] = []
     for _ in range(repeats):
         t0 = time.time()
-        page_rank(g, tolerance=0.0, max_iterations=pr_supersteps, track_metrics=track, **kw)
+        page_rank(
+            g, tolerance=0.0, max_iterations=pr_supersteps, track_metrics=track, edge_plan=plan
+        )
         runs.append(round(time.time() - t0, 3))
-    if plan is not None:
-        plan.unpersist()
+    plan.unpersist()
     t_pr = sorted(runs)[len(runs) // 2]  # median
     edges_processed = g.edge_count * pr_supersteps
 

@@ -23,7 +23,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graph_data_science_spark.plans.messaging import EdgePlan
+from graph_data_science_spark.plans.messaging import GatherPlan, gather_plan
 from graph_data_science_spark.plans.pregel import run_pregel
 from graph_data_science_spark.projection import ProjectedGraph
 
@@ -42,17 +42,10 @@ def label_propagation(
     weighted: bool = False,
     seed: DataFrame | None = None,  # (vid, seed_label)
     node_weights: DataFrame | None = None,  # (vid, node_weight)
-    edge_plan: EdgePlan | None = None,
+    edge_plan: GatherPlan | None = None,
     executor: str = "relational",
 ) -> LabelPropagationResult:
-    csr = None
-    if executor == "csr":
-        from graph_data_science_spark.plans.csr import CsrPlan
-
-        csr = CsrPlan(graph.edges, graph.node_count)
-        plan = None
-    else:
-        plan = edge_plan or EdgePlan(graph.edges)
+    plan = edge_plan or gather_plan(graph.edges, graph.node_count, executor)
 
     init = graph.nodes.select("vid", F.col("vid").alias("label"))
     if seed is not None:
@@ -70,23 +63,8 @@ def label_propagation(
         init = init.withColumn("node_w", F.lit(1.0))
     init = init.withColumn("changed", F.lit(1))
 
-    rel_w = F.col("weight") if weighted else F.lit(1.0)
-
     def step(state: DataFrame, i: int) -> DataFrame:
-        if csr is not None:
-            votes = csr.label_votes(
-                state.select("vid", "label", "node_w"),
-                "label",
-                node_w_col="node_w",
-                weighted=weighted,
-            ).withColumnRenamed("w", "vote")
-        else:
-            votes = plan.messages(
-                state.select("vid", "label", "node_w"),
-                {"label": F.col("label"), "vote": F.col("node_w") * rel_w},
-                {"vote": F.sum("vote")},
-                group_keys=("label",),
-            )
+        votes = plan.votes(state, "label", "node_w", weighted)
         # argmax with deterministic tie-break: max vote, then min label.
         winner = votes.groupBy("vid").agg(
             F.max(F.struct(F.col("vote"), (-F.col("label")).alias("neg"))).alias("w")
@@ -110,9 +88,7 @@ def label_propagation(
         metrics={"changed": F.coalesce(F.sum("changed"), F.lit(0))},
         stop_fn=lambda m, i: m["changed"] == 0,
     )
-    if csr is not None:
-        csr.unpersist()
-    elif edge_plan is None:
+    if edge_plan is None:
         plan.unpersist()
     return LabelPropagationResult(
         labels=res.state.select("vid", "label"),

@@ -14,10 +14,11 @@ the numpy oracle in tests). Convergence: max per-vertex |Δ| < tolerance
 (the Pregel vote-to-halt criterion — every vertex's delta must be under
 tolerance for the run to halt).
 
-Execution per superstep (relational executor):
+Execution per superstep:
 1. ``contrib = rank / W`` on the state (no shuffle),
-2. one gather/scatter through the salted ``EdgePlan`` (state shuffles to
-   the persisted edge partitioning; messages reduce with map-side combine),
+2. one ``gather`` (sum) through the gather plan — the salted ``EdgePlan``
+   (state shuffles to the persisted edge partitioning; messages reduce with
+   map-side combine) or the CSR blocks of ``plans.csr``,
 3. left join messages back onto the full vertex set (dangling targets get
    0) — same hash key both sides, so no extra exchange.
 """
@@ -30,7 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.plans.checkpoint import CheckpointStore
-from graph_data_science_spark.plans.messaging import EdgePlan
+from graph_data_science_spark.plans.messaging import GatherPlan, gather_plan
 from graph_data_science_spark.plans.pregel import run_pregel
 from graph_data_science_spark.projection import ProjectedGraph
 
@@ -88,7 +89,7 @@ def page_rank(
     weighted: bool = False,
     scaler: str = "none",
     source_nodes: list | None = None,
-    edge_plan: EdgePlan | None = None,
+    edge_plan: GatherPlan | None = None,
     checkpoint: CheckpointStore | None = None,
     checkpoint_every: int = 5,
     executor: str = "relational",
@@ -96,23 +97,19 @@ def page_rank(
 ) -> PageRankResult:
     """``executor``: 'relational' (state⋈edges join, the correctness
     anchor) or 'csr' (per-block CSR Arrow buffers + vectorized pandas-UDF
-    gather-scatter — the north_rule physical path). Both agree bit-for-bit
-    (cross-checked in tests).
+    gather-scatter — the north_rule physical path); see
+    ``plans.messaging.gather_plan``. The tests hold the two to |Δscore| <
+    1e-12 on the golden fixtures and < 1e-10 on a weighted random graph.
+    ``edge_plan`` (either kind, owned by the caller) is used instead of
+    building one.
 
     ``track_metrics=False`` (fixed-iteration runs only, tolerance ≤ 0)
     only skips the per-superstep convergence aggregate (max delta, rank
     sum). It saves no Spark job: the aggregate is observed on the
     checkpoint that materializes each superstep."""
-    csr = None
-    if executor == "csr":
-        from graph_data_science_spark.plans.csr import CsrPlan
-
-        csr = CsrPlan(graph.edges, graph.node_count)
-        plan = None
-    elif executor == "relational":
-        plan = edge_plan or EdgePlan(graph.edges)
-    else:
-        raise ValueError("executor must be 'relational' or 'csr'")
+    if not track_metrics and tolerance > 0:
+        raise ValueError("track_metrics=False requires tolerance <= 0 (fixed iterations)")
+    plan = edge_plan or gather_plan(graph.edges, graph.node_count, executor)
     out_w = graph.degrees("out", weighted=weighted)  # (vid, degree); 0 for dangling
 
     # Personalized PR (reference ``sourceNodes``): the teleport term
@@ -138,16 +135,11 @@ def page_rank(
         F.lit(float("inf")).alias("delta"),
     )
 
-    msg_expr = F.col("contrib") * (F.col("weight") if weighted else F.lit(1.0))
-
     def step(state: DataFrame, i: int) -> DataFrame:
         contribs = state.filter(F.col("out_w") > 0).select(
             "vid", (F.col("rank") / F.col("out_w")).alias("contrib")
         )
-        if csr is not None:
-            msgs = csr.messages(contribs, "contrib", op="sum", weighted=weighted)
-        else:
-            msgs = plan.messages(contribs, {"msg": msg_expr}, {"msg": F.sum("msg")})
+        msgs = plan.gather(contribs, "contrib", "sum", weighted)
         new_rank = F.lit(1.0 - damping) * F.col("teleport") + F.lit(damping) * F.coalesce(
             F.col("msg"), F.lit(0.0)
         )
@@ -162,8 +154,6 @@ def page_rank(
             )
         )
 
-    if not track_metrics and tolerance > 0:
-        raise ValueError("track_metrics=False requires tolerance <= 0 (fixed iterations)")
     res = run_pregel(
         init,
         step,
@@ -177,9 +167,7 @@ def page_rank(
         checkpoint_every=checkpoint_every,
     )
     scores = _scale(res.state.select("vid", F.col("rank").alias("score")), scaler)
-    if csr is not None:
-        csr.unpersist()
-    elif edge_plan is None:
+    if edge_plan is None:
         plan.unpersist()
     return PageRankResult(
         scores=scores,

@@ -47,7 +47,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from graph_data_science_spark.plans.messaging import EdgePlan
+from graph_data_science_spark.plans.messaging import gather_plan
 from graph_data_science_spark.plans.pregel import observed_checkpoint, release_checkpoint, run_pregel
 from graph_data_science_spark.projection import ProjectedGraph, assign_dense_ids
 
@@ -153,25 +153,15 @@ def _wcc_propagation(
     sym = pairs.unionByName(
         pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).withColumn("weight", F.lit(1.0))
-    if executor == "csr":
-        from graph_data_science_spark.plans.csr import CsrPlan
-
-        plan = CsrPlan(sym, graph.node_count)
-    else:
-        plan = EdgePlan(sym)
+    plan = gather_plan(sym, graph.node_count, executor)
     init = graph.nodes.select(
         "vid", F.col("vid").alias("label"), F.lit(1).alias("changed")
     )
 
     def step(state: DataFrame, i: int) -> DataFrame:
         frontier = state.filter(F.col("changed") == 1).select("vid", "label")
-        if executor == "csr":
-            msgs = plan.messages(frontier, "label", op="min").withColumnRenamed(
-                "msg", "m"
-            ).select("vid", F.col("m").cast("long").alias("m"))
-        else:
-            msgs = plan.messages(frontier, {"m": F.col("label")}, {"m": F.min("m")})
-        new_label = F.least(F.col("label"), F.coalesce(F.col("m"), F.col("label")))
+        msgs = plan.gather(frontier, "label", "min")
+        new_label = F.least(F.col("label"), F.coalesce(F.col("msg"), F.col("label")))
         return state.join(msgs, "vid", "left").select(
             "vid",
             new_label.alias("label"),

@@ -19,14 +19,19 @@ block — hit the final ``groupBy(dst)`` shuffle. Hub skew is handled by
 construction: a hub's in-edges are spread across all source blocks, so
 its partial sums arrive pre-reduced, ≤ one row per block.
 
-Kernels (all reducers associative+commutative, same contract as
-plans/messaging.EdgePlan):
-- ``sum``  — Σ val_src·w (PageRank contributions)
-- ``min``  — min val_src (WCC/SCC min-label propagation)
-- ``vote`` — Σ w per (dst, label) (LPA weighted votes; grouped key)
+Kernels: ``CsrPlan`` answers the same two calls as
+``plans.messaging.EdgePlan`` (``GatherPlan``), and both run through one
+cogroup + ragged-gather helper (``_reduce``); reducers are associative and
+commutative, as the two-level reduce requires:
+- ``gather(state, value, op)`` — Σ val_src(·w) (PageRank contributions)
+  or min val_src (WCC min-label propagation) per destination
+- ``votes(state, label, node_w)`` — Σ node_w·w per (dst, label) (LPA
+  weighted votes; grouped key)
 
-Cross-check: tests assert CsrPlan ≡ EdgePlan bit-for-bit on every
-algorithm (SURVEY.md §4.1 "both executors must agree").
+Cross-check: ``tests/test_csr_executor.py`` holds CsrPlan to EdgePlan on
+PageRank (|Δscore| < 1e-12 on the golden fixtures, < 1e-10 on a weighted
+random graph), on LPA and WCC labels (equal), and on direct ``gather`` and
+``votes`` calls (SURVEY.md §4.1 "both executors must agree").
 """
 
 from __future__ import annotations
@@ -39,6 +44,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+from graph_data_science_spark.plans.messaging import reducer
 
 CSR_SCHEMA = (
     "block long, lo long, hi long, indptr array<long>, "
@@ -88,120 +95,58 @@ class CsrPlan:
         )
         self.blocks.count()  # materialize once; every superstep reuses
 
-    # ------------------------------------------------------------- kernels --
-    def messages(
-        self,
-        state: DataFrame,
-        val_col: str,
-        op: str = "sum",
-        weighted: bool = False,
+    # ------------------------------------ kernels (plans.messaging.GatherPlan) --
+    def gather(
+        self, state: DataFrame, value: str, op: str = "sum", weighted: bool = False
     ) -> DataFrame:
-        """Gather-scatter one superstep: state (vid, <val_col>) → reduced
-        messages (vid, msg). ``state`` may be a frontier subset — blocks
-        gather only the vids present (positions resolved via searchsorted
-        into the block's dense range)."""
-        B = self.block_size
-        if op not in ("sum", "min"):
-            raise ValueError("op must be 'sum' or 'min'")
+        msg = F.col(value).cast("double") if weighted or op == "sum" else F.col(value)
+        return self._reduce(state.select("vid", msg.alias("msg")), (), "msg", op, weighted)
 
-        def kernel(key: tuple, state_pdf: pd.DataFrame, csr_pdf: pd.DataFrame):
-            if csr_pdf.empty or state_pdf.empty:
-                return pd.DataFrame({"vid": [], "msg": []}).astype(
-                    {"vid": np.int64, "msg": np.float64}
-                )
-            row = csr_pdf.iloc[0]
-            lo = int(row["lo"])
-            indptr = np.asarray(row["indptr"], dtype=np.int64)
-            indices = np.asarray(row["indices"], dtype=np.int64)
-            vids = state_pdf["vid"].to_numpy(dtype=np.int64)
-            vals = state_pdf["_val"].to_numpy(dtype=np.float64)
-            local = vids - lo
-            starts, ends = indptr[local], indptr[local + 1]
-            counts = ends - starts
-            total = int(counts.sum())
-            if total == 0:
-                return pd.DataFrame({"vid": [], "msg": []}).astype(
-                    {"vid": np.int64, "msg": np.float64}
-                )
-            # ragged gather: per-active-source neighbor slices, flattened
-            offs = np.repeat(starts - np.concatenate(([0], np.cumsum(counts)[:-1])), counts)
-            flat = offs + np.arange(total, dtype=np.int64)
-            dsts = indices[flat]
-            per_edge = np.repeat(vals, counts)
-            if weighted:
-                per_edge = per_edge * np.asarray(row["weights"], dtype=np.float64)[flat]
-            s = pd.Series(per_edge)
-            grouped = s.groupby(dsts)
-            partial = grouped.sum() if op == "sum" else grouped.min()
-            return pd.DataFrame(
-                {"vid": partial.index.to_numpy(dtype=np.int64), "msg": partial.to_numpy()}
-            )
-
-        st = state.select(
-            "vid", F.col(val_col).cast("double").alias("_val")
-        ).withColumn("block", (F.col("vid") / B).cast("long"))
-        partials = (
-            st.groupBy("block")
-            .cogroup(self.blocks.groupBy("block"))
-            .applyInPandas(kernel, "vid long, msg double")
-        )
-        red = F.sum("msg") if op == "sum" else F.min("msg")
-        return partials.groupBy("vid").agg(red.alias("msg"))
-
-    def label_votes(
-        self,
-        state: DataFrame,
-        label_col: str = "label",
-        node_w_col: str | None = None,
-        weighted: bool = False,
+    def votes(
+        self, state: DataFrame, label: str, node_w: str, weighted: bool = False
     ) -> DataFrame:
-        """LPA kernel: (vid, label[, node_w]) → (vid, label, w) — vote
-        contribution per edge is node_w(u) · w(u→v) (1·1 when unweighted),
-        partial-summed per (dst, label) in-block, reduced per (dst, label)."""
-        B = self.block_size
-
-        def kernel(key: tuple, state_pdf: pd.DataFrame, csr_pdf: pd.DataFrame):
-            if csr_pdf.empty or state_pdf.empty:
-                return pd.DataFrame({"vid": [], "label": [], "w": []}).astype(
-                    {"vid": np.int64, "label": np.int64, "w": np.float64}
-                )
-            row = csr_pdf.iloc[0]
-            lo = int(row["lo"])
-            indptr = np.asarray(row["indptr"], dtype=np.int64)
-            indices = np.asarray(row["indices"], dtype=np.int64)
-            vids = state_pdf["vid"].to_numpy(dtype=np.int64)
-            labels = state_pdf["_lbl"].to_numpy(dtype=np.int64)
-            node_w = state_pdf["_nw"].to_numpy(dtype=np.float64)
-            local = vids - lo
-            starts, ends = indptr[local], indptr[local + 1]
-            counts = ends - starts
-            total = int(counts.sum())
-            if total == 0:
-                return pd.DataFrame({"vid": [], "label": [], "w": []}).astype(
-                    {"vid": np.int64, "label": np.int64, "w": np.float64}
-                )
-            offs = np.repeat(starts - np.concatenate(([0], np.cumsum(counts)[:-1])), counts)
-            flat = offs + np.arange(total, dtype=np.int64)
-            w = np.repeat(node_w, counts)
-            if weighted:
-                w = w * np.asarray(row["weights"], dtype=np.float64)[flat]
-            out = pd.DataFrame(
-                {"vid": indices[flat], "label": np.repeat(labels, counts), "w": w}
-            )
-            return out.groupby(["vid", "label"], as_index=False)["w"].sum()
-
-        nw = (
-            F.col(node_w_col).cast("double") if node_w_col is not None else F.lit(1.0)
-        )
         st = state.select(
-            "vid", F.col(label_col).cast("long").alias("_lbl"), nw.alias("_nw")
-        ).withColumn("block", (F.col("vid") / B).cast("long"))
-        partials = (
-            st.groupBy("block")
-            .cogroup(self.blocks.groupBy("block"))
-            .applyInPandas(kernel, "vid long, label long, w double")
+            "vid", F.col(label).alias("label"), F.col(node_w).cast("double").alias("vote")
         )
-        return partials.groupBy("vid", "label").agg(F.sum("w").alias("w"))
+        return self._reduce(st, ("label",), "vote", "sum", weighted)
+
+    def _reduce(
+        self, state: DataFrame, keys: tuple[str, ...], value: str, op: str, weighted: bool
+    ) -> DataFrame:
+        """Cogroup state (vid, *keys, value) with the CSR blocks. Each block
+        fans its active sources' rows out along indptr (value × edge weight
+        when ``weighted``), reduces them per (dst, *keys) in-block, and the
+        partials reduce once more per (vid, *keys) across blocks."""
+        red = reducer(op)
+        B = self.block_size
+        group = ["vid", *keys]
+        schema = state.schema
+
+        def kernel(_, state_pdf: pd.DataFrame, csr_pdf: pd.DataFrame) -> pd.DataFrame:
+            if csr_pdf.empty or state_pdf.empty:
+                return pd.DataFrame(columns=schema.names)
+            row = csr_pdf.iloc[0]
+            indptr = np.asarray(row["indptr"], dtype=np.int64)
+            local = state_pdf["vid"].to_numpy(dtype=np.int64) - int(row["lo"])
+            starts = indptr[local]
+            counts = indptr[local + 1] - starts
+            # ragged gather: per-active-source neighbour slices, flattened
+            offs = np.repeat(starts - np.concatenate(([0], np.cumsum(counts)[:-1])), counts)
+            flat = offs + np.arange(int(counts.sum()), dtype=np.int64)
+            src = np.repeat(np.arange(len(local)), counts)
+            cols = {c: state_pdf[c].to_numpy()[src] for c in schema.names[1:]}
+            if weighted:
+                cols[value] = cols[value] * np.asarray(row["weights"], dtype=np.float64)[flat]
+            fanned = pd.DataFrame({"vid": np.asarray(row["indices"], dtype=np.int64)[flat], **cols})
+            return fanned.groupby(group, as_index=False)[value].agg(op)
+
+        partials = (
+            state.withColumn("block", (F.col("vid") / B).cast("long"))
+            .groupBy("block")
+            .cogroup(self.blocks.groupBy("block"))
+            .applyInPandas(kernel, schema)
+        )
+        return partials.groupBy(*group).agg(red(value).alias(value))
 
     def unpersist(self) -> None:
         try:

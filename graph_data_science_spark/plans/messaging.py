@@ -19,13 +19,61 @@ Message *reduction* (``groupBy(dst).agg``) needs no salting: Catalyst's
 partial aggregation emits at most one row per (task, dst) — an in-hub
 receives ≤ #tasks partial rows regardless of its in-degree. This division
 of labor (salt the join, trust the combiner) is SURVEY.md §4.1.
+
+PageRank, LPA and WCC propagation gather only through ``gather`` and
+``votes``, which ``plans.csr.CsrPlan`` answers too (:class:`GatherPlan`);
+:func:`gather_plan` is the one place that picks the executor. The other
+algorithms use the general ``EdgePlan.messages``.
 """
 
 from __future__ import annotations
 
+from typing import Callable, Protocol
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+
+class GatherPlan(Protocol):
+    """The superstep gather both executors answer: ``EdgePlan`` (relational
+    join) and ``plans.csr.CsrPlan`` (CSR blocks), built by
+    :func:`gather_plan`. ``state`` may be a frontier subset."""
+
+    def gather(
+        self, state: DataFrame, value: str, op: str = "sum", weighted: bool = False
+    ) -> DataFrame:
+        """state (vid, <value>) → (vid, msg): the sum or min (``op``) of the
+        in-neighbours' values, × edge weight when ``weighted``. Sums are
+        doubles; an unweighted min keeps the value's type."""
+
+    def votes(
+        self, state: DataFrame, label: str, node_w: str, weighted: bool = False
+    ) -> DataFrame:
+        """LPA tally: (vid, <label>, <node_w>) → (vid, label, vote), the vote
+        being Σ node_w(u) · w(u→v) over in-edges (w = 1 when unweighted)."""
+
+    def unpersist(self) -> None: ...
+
+
+def gather_plan(edges: DataFrame, node_count: int, executor: str) -> GatherPlan:
+    """Build the gather plan for ``executor``: 'relational' (state⋈edges
+    join, the correctness anchor) or 'csr' (CSR Arrow blocks + numpy
+    gather-scatter, the north_rule physical path)."""
+    if executor == "relational":
+        return EdgePlan(edges)
+    if executor == "csr":
+        from graph_data_science_spark.plans.csr import CsrPlan
+
+        return CsrPlan(edges, node_count)
+    raise ValueError(f"executor must be 'relational' or 'csr', got {executor!r}")
+
+
+def reducer(op: str) -> Callable[[str], Column]:
+    """The aggregate for a gather ``op``: 'sum' or 'min'."""
+    if op not in ("sum", "min"):
+        raise ValueError(f"op must be 'sum' or 'min', got {op!r}")
+    return F.sum if op == "sum" else F.min
 
 
 class EdgePlan:
@@ -44,10 +92,7 @@ class EdgePlan:
 
         out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
         if salt_threshold is None:
-            row = out_deg.agg(
-                F.avg("deg").alias("avg"), F.count(F.lit(1)).alias("n")
-            ).collect()[0]
-            avg = float(row["avg"] or 1.0)
+            avg = float(out_deg.agg(F.avg("deg")).collect()[0][0] or 1.0)
             salt_threshold = int(max(256, 16 * avg))
         self.salt_threshold = salt_threshold
 
@@ -160,6 +205,28 @@ class EdgePlan:
         keys = ["vid", *group_keys]
         return per_edge.groupBy(*keys).agg(
             *[reducers[k].alias(k) for k in msg_exprs if k not in group_keys]
+        )
+
+    def gather(
+        self, state: DataFrame, value: str, op: str = "sum", weighted: bool = False
+    ) -> DataFrame:
+        red = reducer(op)
+        msg = F.col(value)
+        if weighted:
+            msg = msg * F.col("weight")
+        elif op == "sum":
+            msg = msg * F.lit(1.0)  # sums are doubles, weighted or not
+        return self.messages(state, {"msg": msg}, {"msg": red("msg")})
+
+    def votes(
+        self, state: DataFrame, label: str, node_w: str, weighted: bool = False
+    ) -> DataFrame:
+        w = F.col("weight") if weighted else F.lit(1.0)
+        return self.messages(
+            state,
+            {"label": F.col(label), "vote": F.col(node_w) * w},
+            {"vote": F.sum("vote")},
+            group_keys=("label",),
         )
 
     def unpersist(self) -> None:

@@ -12,6 +12,7 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -42,14 +43,41 @@ def summarize(name: str, plan: str, markers: list[str]) -> str:
         out.append(f"- `{m}`: **{status}**")
         for l in h:
             out.append(f"  - `{l}`")
-    import re as _re
-
-    ids = set(_re.findall(r"codegen id : (\d+)", plan))
-    starred = sum(1 for l in lines if _re.match(r"\s*[:+\-\s]*\* ", l))
+    ids = set(re.findall(r"codegen id : (\d+)", plan))
+    starred = sum(1 for l in lines if re.match(r"\s*[:+\-\s]*\* ", l))
     out.append(
         f"- codegen-enabled operators: {starred} in {len(ids)} WholeStageCodegen spans"
     )
     return "\n".join(out) + "\n"
+
+
+def sorts_above_cache_scans(tree: str) -> list[str]:
+    """Sort operators between an ``InMemoryTableScan`` and its first join
+    ancestor in a formatted-explain operator tree — a per-superstep re-sort
+    of a cached relation. Scans inside a cache's build lineage (below an
+    ``InMemoryRelation``) are skipped: that work is paid once."""
+    lines = tree.splitlines()
+
+    def depth(line: str) -> int:
+        m = re.search(r"[+:]- ", line)
+        return m.start() if m else -1
+
+    found = []
+    for i, line in enumerate(lines):
+        if "InMemoryTableScan" not in line:
+            continue
+        d, path = depth(line), []
+        for above in reversed(lines[:i]):
+            if depth(above) >= d:
+                continue
+            d = depth(above)
+            if "Join" in above or "InMemoryRelation" in above:
+                if "InMemoryRelation" not in above:
+                    found += path
+                break
+            if "Sort (" in above:
+                path.append(above.strip())
+    return found
 
 
 def main() -> None:
@@ -99,7 +127,7 @@ def main() -> None:
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     plan = EdgePlan(g.edges)
     state = g.nodes.select("vid", F.lit(1.0).alias("contrib")).localCheckpoint(eager=True)
-    msgs = plan.messages(state, {"msg": F.col("contrib")}, {"msg": F.sum("msg")})
+    msgs = plan.gather(state, "contrib")
     p = plan_of(msgs)
     sections.append(
         summarize(
@@ -140,23 +168,29 @@ def main() -> None:
         F.lit(1.0).alias("weight"),
     )
     syn_plan = EdgePlan(syn_edges)
-    st0 = (
-        syn_edges.select(F.col("src").alias("vid")).distinct()
-        .select("vid", F.lit(1.0).alias("rank"), F.lit(2.0).alias("out_w"))
-        .localCheckpoint(eager=True)
-    )
 
-    def _pr_step(st):
-        contribs = st.select("vid", (F.col("rank") / F.col("out_w")).alias("contrib"))
-        m = syn_plan.messages(contribs, {"msg": F.col("contrib")}, {"msg": F.sum("msg")})
-        return st.join(m, "vid", "left").select(
-            "vid", F.coalesce("msg", F.lit(0.0)).alias("rank"), "out_w"
+    def _steady_plan(edge_plan, edges) -> str:
+        """Formatted plan of superstep 2 of a PageRank-shaped loop."""
+        st0 = (
+            edges.select(F.col("src").alias("vid")).distinct()
+            .select("vid", F.lit(1.0).alias("rank"), F.lit(2.0).alias("out_w"))
+            .localCheckpoint(eager=True)
         )
 
-    steady = _pr_step(_pr_step(st0).localCheckpoint(eager=True))
-    p2 = plan_of(steady)
+        def _pr_step(st):
+            contribs = st.select("vid", (F.col("rank") / F.col("out_w")).alias("contrib"))
+            m = edge_plan.gather(contribs, "contrib")
+            return st.join(m, "vid", "left").select(
+                "vid", F.coalesce("msg", F.lit(0.0)).alias("rank"), "out_w"
+            )
+
+        return plan_of(_pr_step(_pr_step(st0).localCheckpoint(eager=True)))
+
+    p2 = _steady_plan(syn_plan, syn_edges)
     tree = p2.split("\n\n")[0]  # operator tree only, without node details
     sort_lines = [l.strip()[:120] for l in tree.splitlines() if "Sort (" in l and "SortMergeJoin" not in l]
+    if sorts_above_cache_scans(tree):
+        raise RuntimeError(f"edge cache re-sorted per superstep:\n{tree}")
     sections.append(
         summarize(
             "STEADY-STATE PageRank superstep (sorted edge cache, broadcast off "
@@ -173,6 +207,39 @@ def main() -> None:
         "`Sort [_src ASC]` directly above the edge InMemoryTableScan).\n"
     )
     syn_plan.unpersist()
+
+    # 4c. STEADY-STATE salted superstep: the same loop over an EdgePlan with
+    #     one hub above salt_threshold, so the gather joins on (_src, _salt)
+    #     against the replicated hot state. The edge cache is sorted on both
+    #     keys at build, so no Sort may sit above its InMemoryTableScan.
+    hub_edges = syn_edges.unionByName(
+        spark.range(0, 200).select(
+            F.lit(0).cast("long").alias("src"),
+            (F.col("id") % 100).alias("dst"),
+            F.lit(1.0).alias("weight"),
+        )
+    )
+    hub_plan = EdgePlan(hub_edges, salt_threshold=50)
+    p3 = _steady_plan(hub_plan, hub_edges)
+    above = sorts_above_cache_scans(p3.split("\n\n")[0])
+    if hub_plan.hot_count != 1 or above:
+        raise RuntimeError(
+            f"salted cell: {hub_plan.hot_count} hot vertices, Sorts above the cache: {above}"
+        )
+    sections.append(
+        summarize(
+            "STEADY-STATE salted PageRank superstep (one hub above "
+            "salt_threshold; gather joins on (_src, _salt); broadcast off "
+            "except the hot-set hints)",
+            p3,
+            ["SortMergeJoin", "Exchange (", "InMemoryTableScan", "Generate", "Union"],
+        )
+        + f"- hot vertices: {hub_plan.hot_count}; Sort operators between a cached-"
+        "relation scan and its first join (must be none): "
+        + (", ".join(f"`{l}`" for l in above) or "none")
+        + "\n"
+    )
+    hub_plan.unpersist()
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast_before)
     spark.conf.set("spark.sql.adaptive.enabled", "true")
 

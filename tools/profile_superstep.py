@@ -65,7 +65,7 @@ def main() -> None:
         contribs = state.filter(F.col("out_w") > 0).select(
             "vid", (F.col("rank") / F.col("out_w")).alias("contrib")
         )
-        msgs = plan.messages(contribs, {"msg": F.col("contrib")}, {"msg": F.sum("msg")})
+        msgs = plan.gather(contribs, "contrib")
         new_rank = F.lit(1.0 - damping) * F.col("teleport") + F.lit(damping) * F.coalesce(
             F.col("msg"), F.lit(0.0)
         )
