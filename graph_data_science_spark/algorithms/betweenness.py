@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from graph_data_science_spark.plans.pregel import release_checkpoint
 from graph_data_science_spark.projection import ProjectedGraph
 
 
@@ -78,11 +79,14 @@ def betweenness(
             .localCheckpoint(eager=True)
         )
         if nxt.limit(1).count() == 0:
+            release_checkpoint(nxt)
             break
         levels.append(nxt)
-        settled = settled.unionByName(nxt.select("src", "vid")).localCheckpoint(
+        new_settled = settled.unionByName(nxt.select("src", "vid")).localCheckpoint(
             eager=True
         )
+        release_checkpoint(settled)
+        settled = new_settled
 
     # backward: deepest level first, all sources at once
     acc = [levels[-1].select("src", "vid", F.lit(0.0).alias("delta"))]
@@ -124,6 +128,10 @@ def betweenness(
     scores = (
         nodes.join(summed, "vid", "left")
         .select("vid", F.coalesce("score", F.lit(0.0)).alias("score"))
+        .localCheckpoint(eager=True)
     )
+    # scores is materialized: free the pair states it was built from
+    for df in [*levels, settled, *acc[1:]]:
+        release_checkpoint(df)
     edges.unpersist()
     return BetweennessResult(scores=scores, sources_used=n_sources)

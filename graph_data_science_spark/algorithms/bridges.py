@@ -78,7 +78,7 @@ def bridges(graph: ProjectedGraph, max_iterations: int = 1000) -> BridgesResult:
     )
     rounds = 0
     frontier = state.filter(F.col("depth").isNotNull())
-    prev_nxt = None  # two-generation bound: unpersist superseded checkpoints
+    prev_nxt = None
     while rounds < max_iterations:
         nxt = (
             frontier.join(adj, frontier["vid"] == adj["src"])

@@ -16,8 +16,9 @@ Jones-Plassmann-style synchronous rounds, deterministic:
    the smallest-vid node of every conflict chain, so ≤ Δ+1 rounds and
    colors never exceed Δ+1 (the mex of ≤ Δ values is ≤ Δ).
 
-One join + one groupBy per round over the symmetrized edge table — the
-same superstep cost class as LPA.
+Each round is one ``run_pregel`` superstep: one join + one groupBy over
+the symmetrized edge table — the same cost class as LPA — with the
+recolor count observed on the round's checkpoint.
 """
 
 from __future__ import annotations
@@ -28,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from graph_data_science_spark.plans.pregel import run_pregel
 from graph_data_science_spark.projection import ProjectedGraph, undirect_edges
 
 
@@ -36,8 +38,9 @@ class ColoringResult:
     colors: DataFrame  # (vid, color)
     iterations: int
     metrics: list[dict] = field(default_factory=list)
-    #: False when ``max_iterations`` was exhausted while the last round
-    #: still recolored nodes — the returned coloring MAY be improper.
+    #: True only when a round recolored no node (the coloring is proper);
+    #: False when ``max_iterations`` ran out first, also at 0 — the
+    #: returned coloring MAY then be improper.
     converged: bool = True
 
 
@@ -54,13 +57,9 @@ def k1coloring(graph: ProjectedGraph, max_iterations: int = 100) -> ColoringResu
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     adj.count()
-    colors = graph.nodes.select("vid", F.lit(0).alias("color")).localCheckpoint(
-        eager=True
-    )
-    metrics: list[dict] = []
-    iterations = 0
-    n_conf = 0
-    for it in range(max_iterations):
+    init = graph.nodes.select("vid", F.lit(0).alias("color"), F.lit(0).alias("_re"))
+
+    def step(colors: DataFrame, i: int) -> DataFrame:
         cs = colors.select(F.col("vid").alias("src"), F.col("color").alias("c_src"))
         cd = colors.select(F.col("vid").alias("dst"), F.col("color").alias("c_dst"))
         tagged = adj.join(cs, "src").join(cd, "dst")
@@ -87,23 +86,23 @@ def k1coloring(graph: ProjectedGraph, max_iterations: int = 100) -> ColoringResu
                 ).alias("_new"),
             )
         )
-        new_colors = (
-            colors.join(ncolors, "vid", "left")
-            .select(
-                "vid",
-                F.coalesce("_new", F.col("color")).alias("color"),
-                F.col("_new").isNotNull().cast("int").alias("_re"),
-            )
-            .localCheckpoint(eager=False)  # the count below materializes it
+        return colors.join(ncolors, "vid", "left").select(
+            "vid",
+            F.coalesce("_new", F.col("color")).alias("color"),
+            F.col("_new").isNotNull().cast("int").alias("_re"),
         )
-        n_conf = int(new_colors.agg(F.sum("_re")).collect()[0][0] or 0)
-        iterations = it + 1
-        metrics.append({"iteration": it, "recolored": n_conf})
-        colors.unpersist()
-        colors = new_colors.select("vid", "color")
-        if n_conf == 0:
-            break
+
+    res = run_pregel(
+        init,
+        step,
+        max_iterations=max_iterations,
+        metrics={"recolored": F.coalesce(F.sum("_re"), F.lit(0))},
+        stop_fn=lambda m, i: m["recolored"] == 0,
+    )
     adj.unpersist()
     return ColoringResult(
-        colors=colors, iterations=iterations, metrics=metrics, converged=n_conf == 0
+        colors=res.state.select("vid", "color"),
+        iterations=res.iterations,
+        metrics=res.metrics,
+        converged=res.converged,
     )

@@ -22,9 +22,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from graph_data_science_spark.plans.pregel import release_checkpoint, run_pregel
 from graph_data_science_spark.projection import ProjectedGraph, undirect_edges
 
 
@@ -58,33 +59,31 @@ def hash_gnn(
         )
     else:
         feats = features.select("vid", F.col("feature").cast("long").alias("feature"))
-    feats = feats.distinct().localCheckpoint(eager=True)
+    # bottom-k per node via a rank window (NOT collect_set into one
+    # array — a hub's pool is deg × density rows and an array that
+    # size is a straight OOM at scale; the window sort spills)
+    win = Window.partitionBy("vid").orderBy("_h", "feature")
 
-    for it in range(1, iterations + 1):
+    def step(feats: DataFrame, i: int) -> DataFrame:
         nbr = adj.join(
             feats.withColumnRenamed("vid", "src"), "src"
         ).select(F.col("dst").alias("vid"), "feature")
-        pool = feats.unionByName(nbr)
         # min-hash selection: keep the k tokens with the smallest
         # iteration-salted hash — a deterministic sample of the
         # neighborhood multiset (standard bottom-k sketch)
-        hashed = pool.select(
+        hashed = feats.unionByName(nbr).select(
             "vid",
             "feature",
-            F.xxhash64(F.col("feature"), F.lit(it), F.lit(seed)).alias("_h"),
+            F.xxhash64(F.col("feature"), F.lit(i + 1), F.lit(seed)).alias("_h"),
         ).distinct()
-        # bottom-k per node via a rank window (NOT collect_set into one
-        # array — a hub's pool is deg × density rows and an array that
-        # size is a straight OOM at scale; the window sort spills)
-        from pyspark.sql import Window
-
-        win = Window.partitionBy("vid").orderBy("_h", "feature")
-        feats = (
+        return (
             hashed.withColumn("_rn", F.row_number().over(win))
             .filter(F.col("_rn") <= embedding_density)
             .select("vid", "feature")
-            .localCheckpoint(eager=True)
         )
+
+    feats = run_pregel(feats.distinct(), step, max_iterations=iterations).state
+    release_checkpoint(adj)
     emb = feats.groupBy("vid").agg(
         F.array_sort(F.collect_set("feature")).alias("embedding")
     )

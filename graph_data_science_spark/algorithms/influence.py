@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from graph_data_science_spark.plans.pregel import release_checkpoint
 from graph_data_science_spark.projection import ProjectedGraph
 
 
@@ -101,9 +102,15 @@ def celf_influence_maximization(
             .localCheckpoint(eager=True)
         )
         if nxt.limit(1).count() == 0:
+            release_checkpoint(nxt)
             break
-        settled = settled.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
+        new_settled = settled.unionByName(nxt).localCheckpoint(eager=True)
+        release_checkpoint(settled)
+        if frontier is not settled:
+            release_checkpoint(frontier)
+        frontier, settled = nxt, new_settled
+    if frontier is not settled:
+        release_checkpoint(frontier)
     live.unpersist()
     reach = settled  # (cand, sim, vid)
 
@@ -140,9 +147,16 @@ def celf_influence_maximization(
         spread += gain / mc_simulations
         chosen.append((best, spread))
         new_r = reach.filter(F.col("cand") == best).select("sim", "vid")
-        reach_s = (
+        new_s = (
             new_r if reach_s is None else reach_s.unionByName(new_r).distinct()
         ).localCheckpoint(eager=True)
+        if reach_s is not None:
+            release_checkpoint(reach_s)
+        reach_s = new_s
+    # the seeds are built on the driver: free every checkpoint
+    for df in (cands, reach, reach_s):
+        if df is not None:
+            release_checkpoint(df)
     seeds = spark.createDataFrame(
         [(i, c, float(s)) for i, (c, s) in enumerate(chosen)],
         "rank int, vid long, expected_spread_after double",

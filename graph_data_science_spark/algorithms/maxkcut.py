@@ -16,9 +16,10 @@ best-move local search with deterministic seeding:
    all-movers can swap two adjacent nodes forever);
 4. stop when no node improves or ``max_iterations`` rounds ran.
 
-Each round is one gather + one argmin — no per-node Python, no collect
-beyond the scalar move count. Local search on max-k-cut cannot decrease
-the cut (moves apply only with strict gain), so cut(result) ≥ cut(init).
+Each round is one ``run_pregel`` superstep: one gather + one argmin, with
+the move count observed on the round's checkpoint — no per-node Python.
+Local search on max-k-cut cannot decrease the cut (moves apply only with
+strict gain), so cut(result) ≥ cut(init).
 """
 
 from __future__ import annotations
@@ -29,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from graph_data_science_spark.plans.pregel import run_pregel
 from graph_data_science_spark.projection import ProjectedGraph, undirect_edges
 
 
@@ -78,62 +80,67 @@ def approx_max_k_cut(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     sym.count()
-    assign = graph.nodes.select(
-        "vid", F.pmod(F.col("vid"), F.lit(k)).alias("community")
-    ).localCheckpoint(eager=True)
-    metrics: list[dict] = []
-    iterations = 0
-    for it in range(max_iterations):
+    init = graph.nodes.select(
+        "vid", F.pmod(F.col("vid"), F.lit(k)).alias("community"), F.lit(0).alias("moved")
+    )
+    parts = F.sequence(F.lit(0), F.lit(k - 1))
+    best = F.array_min(
+        F.transform(
+            parts,
+            lambda p: F.struct(
+                F.coalesce(F.element_at("wm", p.cast("long")), F.lit(0.0)).alias("w"),
+                p.cast("long").alias("part"),
+            ),
+        )
+    )
+    cur_w = F.coalesce(F.element_at("wm", F.col("community").cast("long")), F.lit(0.0))
+
+    def step(assign: DataFrame, i: int) -> DataFrame:
         a_dst = assign.select(F.col("vid").alias("dst"), F.col("community").alias("c_n"))
         # weight from each node into each part; parts with zero weight are
         # absent — the argmin falls back to the lowest absent part, found
-        # by folding over the k-sequence (k is small, an expression fold)
+        # by folding over the k-sequence (k is small, an expression fold).
+        # A node without edges gets a NULL map and never moves.
         into = (
             sym.join(a_dst, "dst")
             .groupBy("src", "c_n")
             .agg(F.sum("weight").alias("w"))
-            .groupBy("src")
+            .groupBy(F.col("src").alias("vid"))
             .agg(F.map_from_entries(F.collect_list(F.struct("c_n", "w"))).alias("wm"))
         )
-        parts = F.sequence(F.lit(0), F.lit(k - 1))
-        best = F.array_min(
-            F.transform(
-                parts,
-                lambda p: F.struct(
-                    F.coalesce(F.element_at("wm", p.cast("long")), F.lit(0.0)).alias("w"),
-                    p.cast("long").alias("part"),
-                ),
-            )
+        move = (
+            (F.pmod(F.col("vid"), F.lit(2)) == F.lit(i % 2))
+            & (F.col("_b.part") != F.col("community"))
+            & (F.col("_b.w") < cur_w - 1e-12)
         )
-        parity = F.pmod(F.col("vid"), F.lit(2)) == F.lit(it % 2)
-        cur_w = F.coalesce(
-            F.element_at("wm", F.col("community").cast("long")), F.lit(0.0)
-        )
-        moved = (
-            assign.join(into.withColumnRenamed("src", "vid"), "vid")
+        return (
+            assign.join(into, "vid", "left")
             .withColumn("_b", best)
-            .filter(
-                parity
-                & (F.col("_b.part") != F.col("community"))
-                & (F.col("_b.w") < cur_w - 1e-12)
+            .select(
+                "vid",
+                F.when(move, F.col("_b.part")).otherwise(F.col("community")).alias("community"),
+                move.cast("int").alias("moved"),
             )
-            .select("vid", F.col("_b.part").alias("_new"))
-            .localCheckpoint(eager=True)
         )
-        n_moved = moved.count()
-        iterations = it + 1
-        metrics.append({"iteration": it, "moved": n_moved})
-        if n_moved == 0:
-            if it > 0 and metrics[-2]["moved"] == 0:
-                break  # both parity classes settled
-            continue
-        assign = (
-            assign.join(moved, "vid", "left")
-            .select("vid", F.coalesce("_new", F.col("community")).alias("community"))
-            .localCheckpoint(eager=True)
-        )
+
+    prev = {"moved": None}
+
+    def stop(m: dict, i: int) -> bool:
+        # both parity classes settled: two supersteps in a row moved nothing
+        settled = m["moved"] == prev["moved"] == 0
+        prev["moved"] = m["moved"]
+        return settled
+
+    res = run_pregel(
+        init,
+        step,
+        max_iterations=max_iterations,
+        metrics={"moved": F.coalesce(F.sum("moved"), F.lit(0))},
+        stop_fn=stop,
+    )
+    assign = res.state.select("vid", "community")
     cw = cut_weight(graph, assign)
     sym.unpersist()
     return MaxKCutResult(
-        assignments=assign, cut_weight=cw, iterations=iterations, metrics=metrics
+        assignments=assign, cut_weight=cw, iterations=res.iterations, metrics=res.metrics
     )

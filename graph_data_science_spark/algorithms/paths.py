@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.plans.messaging import EdgePlan
-from graph_data_science_spark.plans.pregel import run_pregel
+from graph_data_science_spark.plans.pregel import release_checkpoint, run_pregel
 from graph_data_science_spark.projection import ProjectedGraph
 
 _INF = float("inf")
@@ -172,8 +172,9 @@ def delta_stepping(
     expression (``when(w ≤ Δ, dist+w).otherwise(inf)``), the same trick
     Yen's spur runs use, so no per-phase edge filter or re-partition.
     The driver loop advances the bucket cursor with one scalar aggregate
-    per phase; state localCheckpoints per phase with the two-copy
-    unpersist bound. Default Δ = mean edge weight (each light phase then
+    per phase; each phase's state is a local checkpoint that frees the
+    one it supersedes (``release_checkpoint``), so only the final state
+    stays persisted. Default Δ = mean edge weight (each light phase then
     clears ~half the outgoing relaxations; the reference's default is a
     fixed 2.0 — pass ``delta=2.0`` for surface parity).
 
@@ -246,16 +247,16 @@ def delta_stepping(
                 (F.col("changed") == 1) & (bucket == i)
             ).select("vid", "dist")
             n_active = frontier.count()
-            state.unpersist()
-            state = new_state.drop("changed")
+            release_checkpoint(state)
+            state = new_state
             if n_active == 0:
                 break
         # one heavy relax from everything bucket i settled
         iterations += 1
         settled = state.filter(bucket == i).select("vid", "dist")
         new_state = relax(state, settled, heavy_m).localCheckpoint(eager=True)
-        state.unpersist()
-        state = new_state.drop("changed")
+        release_checkpoint(state)
+        state = new_state
         metrics.append({"bucket": i})
         cur_bucket = i
     if edge_plan is None:
@@ -786,16 +787,18 @@ def all_pairs_hops(
             .localCheckpoint(eager=True)
         )
         if nxt.limit(1).count() == 0:
-            nxt.unpersist()
+            release_checkpoint(nxt)
             break
         new_settled = settled.unionByName(nxt).localCheckpoint(eager=True)
-        settled.unpersist()
+        release_checkpoint(settled)
         if frontier is not settled:
-            frontier.unpersist()  # the previous round's nxt, now folded in
+            release_checkpoint(frontier)  # the previous round's nxt, now folded in
         # nxt stays persisted one more round (it is the next frontier).
         frontier = nxt
         settled = new_settled
         d += 1
+    if frontier is not settled:
+        release_checkpoint(frontier)
     edges.unpersist()
     return settled
 
@@ -824,21 +827,21 @@ def all_pairs_distances(
     edges.count()
     if sources is None:
         sources = graph.nodes.select("vid")
-    state = sources.select(
+    init = sources.select(
         F.col("vid").alias("src"),
         F.col("vid").alias("vid"),
         F.lit(0.0).alias("dist"),
         F.lit(1).alias("changed"),
-    ).localCheckpoint(eager=True)
-    it = 0
-    while it < max_iterations:
+    )
+
+    def step(state: DataFrame, i: int) -> DataFrame:
         frontier = state.filter(F.col("changed") == 1).select("src", "vid", "dist")
         msgs = (
             frontier.join(edges, frontier["vid"] == edges["u"])
             .groupBy("src", F.col("v").alias("vid"))
             .agg(F.min(F.col("dist") + F.col("weight")).alias("m"))
         )
-        nxt = (
+        return (
             state.select("src", "vid", "dist")
             .join(msgs, ["src", "vid"], "full_outer")
             .select(
@@ -851,14 +854,15 @@ def all_pairs_distances(
                     F.coalesce("m", F.lit(_INF)) < F.coalesce("dist", F.lit(_INF))
                 ).cast("int").alias("changed"),
             )
-            .localCheckpoint(eager=True)
         )
-        n_changed = int(nxt.agg(F.sum("changed")).collect()[0][0] or 0)
-        state.unpersist()  # superseded checkpoint — keep a two-copy bound
-        state = nxt
-        it += 1
-        if n_changed == 0:
-            break
+
+    state = run_pregel(
+        init,
+        step,
+        max_iterations=max_iterations,
+        metrics={"changed": F.coalesce(F.sum("changed"), F.lit(0))},
+        stop_fn=lambda m, i: m["changed"] == 0,
+    ).state
     edges.unpersist()
     return state.select("src", "vid", F.col("dist").alias("distance"))
 

@@ -30,6 +30,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from graph_data_science_spark.plans.pregel import release_checkpoint, run_pregel
 from graph_data_science_spark.projection import ProjectedGraph, undirect_edges
 
 
@@ -53,20 +54,18 @@ def sllpa(
     adj = (
         edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
     ).localCheckpoint(eager=True)
-    memory = graph.nodes.select(
-        "vid", F.col("vid").alias("label"), F.lit(1).alias("cnt")
-    ).localCheckpoint(eager=True)
+    init = graph.nodes.select("vid", F.col("vid").alias("label"), F.lit(1).alias("cnt"))
+    win = Window.partitionBy("src", "dst").orderBy("label")
+    tot = Window.partitionBy("src", "dst")
 
-    for it in range(1, max_iterations + 1):
+    def step(memory: DataFrame, i: int) -> DataFrame:
         # speakers: each (u → v) edge draws ONE label from u's memory
         spoken_cand = adj.join(
             memory.withColumnRenamed("vid", "src"), "src"
         )  # (src, dst, label, cnt)
-        win = Window.partitionBy("src", "dst").orderBy("label")
-        tot = Window.partitionBy("src", "dst")
         r = (
             F.pmod(
-                F.xxhash64(F.col("src"), F.col("dst"), F.lit(it), F.lit(seed)),
+                F.xxhash64(F.col("src"), F.col("dst"), F.lit(i + 1), F.lit(seed)),
                 F.lit(1 << 62),
             ).cast("double")
             / float(1 << 62)
@@ -85,12 +84,14 @@ def sllpa(
             F.max(F.struct(F.col("n"), (-F.col("label")).alias("neg"))).alias("b")
         ).select("vid", (-F.col("b.neg")).alias("label"))
         # append to memory (increment the chosen label's count)
-        memory = (
+        return (
             memory.unionByName(best.withColumn("cnt", F.lit(1)))
             .groupBy("vid", "label")
             .agg(F.sum("cnt").alias("cnt"))
-            .localCheckpoint(eager=True)
         )
+
+    memory = run_pregel(init, step, max_iterations=max_iterations).state
+    release_checkpoint(adj)
 
     total = memory.groupBy("vid").agg(F.sum("cnt").alias("_tot"))
     out = (

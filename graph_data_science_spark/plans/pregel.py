@@ -29,6 +29,7 @@ from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 from graph_data_science_spark.plans.checkpoint import CheckpointStore
@@ -67,8 +68,18 @@ def release_checkpoint(df: DataFrame) -> None:
     nothing here: a local checkpoint persists the RDD under its
     ``LogicalRDD`` directly. Only call this once nothing will read ``df``
     again; its lineage is truncated, so it cannot be recomputed.
+
+    ``df`` must be the DataFrame ``localCheckpoint`` returned: a
+    projection or filter of it has no RDD of its own (``TypeError``).
     """
-    df._jdf.queryExecution().logical().rdd().unpersist(False)
+    try:
+        rdd = df._jdf.queryExecution().logical().rdd()
+    except Py4JError as e:
+        raise TypeError(
+            "release_checkpoint needs the DataFrame that localCheckpoint "
+            "returned, not one derived from it"
+        ) from e
+    rdd.unpersist(False)
 
 
 def observed_checkpoint(df: DataFrame, metrics: dict[str, Column]) -> tuple[DataFrame, dict]:

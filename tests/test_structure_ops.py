@@ -229,6 +229,16 @@ def test_k1coloring_converged_flag(spark):
     assert truncated.converged is False
 
 
+def test_k1coloring_without_rounds_is_not_converged(spark):
+    # No round ran: every node still has color 0, which is improper on
+    # any graph with an edge.
+    nodes, edges = fixtures.two_triangles_bridge()
+    g = _project(spark, nodes, edges, orientation="UNDIRECTED")
+    res = k1coloring(g, max_iterations=0)
+    assert (res.iterations, res.converged) == (0, False)
+    assert {r["color"] for r in res.colors.collect()} == {0}
+
+
 class TestGraphGenerate:
     def test_deterministic_and_shaped(self, spark):
         from graph_data_science_spark.sources.generate import generate_graph
