@@ -28,12 +28,20 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from graph_data_science_spark.plans.pregel import release_checkpoint
 from graph_data_science_spark.projection import ProjectedGraph
+
+
+def _exact_sum(c: Column) -> Column:
+    """Sum of doubles in exact decimal arithmetic, so the order in which
+    the shuffle delivers them cannot change the last bit (the ``sigma``
+    sums are whole numbers and exact in any order). Each term is rounded
+    to 18 decimals; the values here stay far below the type's 1e20."""
+    return F.sum(c.cast("decimal(38,18)")).cast("double")
 
 
 @dataclass
@@ -107,7 +115,7 @@ def betweenness(
                 ["src", "vid"],
             )
             .groupBy("src", "vid")
-            .agg(F.sum(F.col("sigma_u") / F.col("sigma") * F.col("factor")).alias("d_in"))
+            .agg(_exact_sum(F.col("sigma_u") / F.col("sigma") * F.col("factor")).alias("d_in"))
         )
         up = (
             levels[l - 1].select("src", "vid")
@@ -123,7 +131,7 @@ def betweenness(
     summed = (
         deps.filter(F.col("vid") != F.col("src"))
         .groupBy("vid")
-        .agg(F.sum("delta").alias("score"))
+        .agg(_exact_sum(F.col("delta")).alias("score"))
     )
     scores = (
         nodes.join(summed, "vid", "left")

@@ -13,7 +13,8 @@ Plan (all joins/groupBys, rounds bounded by tree depth ≈ graph diameter
 — the same bound every BFS in this engine has):
 
 1. root every component at its min vid; ONE multi-source BFS (hop
-   distances), parents by the deterministic min-pred post-pass;
+   distances, ``plans.pregel.expand_levels``), parents by the
+   deterministic min-pred post-pass;
 2. non-tree edges = canonical symmetrized pairs minus parent-child
    pairs;
 3. covering walk: each non-tree edge walks its two endpoints up the
@@ -36,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from graph_data_science_spark.plans.pregel import expand_levels, observed_checkpoint, release_checkpoint
 from graph_data_science_spark.projection import ProjectedGraph, undirect_edges
 
 
@@ -64,53 +66,18 @@ def bridges(graph: ProjectedGraph, max_iterations: int = 1000) -> BridgesResult:
     adj.count()
 
     comps = wcc(graph).components  # (vid, component) — component = min vid
-    roots = comps.select(F.col("component").alias("vid")).distinct()
 
     # multi-source BFS from every component root over the symmetrized adj
-    state = (
-        comps.select("vid")
-        .join(roots.withColumn("_r", F.lit(1)), "vid", "left")
-        .select(
-            "vid",
-            F.when(F.col("_r").isNotNull(), F.lit(0)).otherwise(F.lit(None)).alias("depth"),
-        )
-        .localCheckpoint(eager=True)
+    depth, rounds = expand_levels(
+        comps.select(F.col("component").alias("vid")).distinct(),
+        lambda frontier: frontier.join(adj, frontier["vid"] == adj["src"]).select(
+            F.col("dst").alias("vid")
+        ),
+        ["vid"],
+        max_iterations,
     )
-    rounds = 0
-    frontier = state.filter(F.col("depth").isNotNull())
-    prev_nxt = None
-    while rounds < max_iterations:
-        nxt = (
-            frontier.join(adj, frontier["vid"] == adj["src"])
-            .select(F.col("dst").alias("vid"), (F.col("depth") + 1).alias("d"))
-            .groupBy("vid")
-            .agg(F.min("d").alias("d"))
-            .join(
-                state.filter(F.col("depth").isNotNull()).select("vid"),
-                "vid",
-                "left_anti",
-            )
-            .localCheckpoint(eager=True)
-        )
-        if nxt.limit(1).count() == 0:
-            nxt.unpersist()
-            break
-        new_state = (
-            state.join(nxt, "vid", "left")
-            .select("vid", F.coalesce("depth", "d").alias("depth"))
-            .localCheckpoint(eager=True)
-        )
-        state.unpersist()
-        if prev_nxt is not None:
-            prev_nxt.unpersist()
-        state = new_state
-        frontier = state.join(nxt.select("vid"), "vid", "semi")
-        prev_nxt = nxt
-        rounds += 1
-
-    depth = state.filter(F.col("depth").isNotNull())
-    d_u = depth.select(F.col("vid").alias("src"), F.col("depth").alias("du"))
-    d_v = depth.select(F.col("vid").alias("dst"), F.col("depth").alias("dv"))
+    d_u = depth.select(F.col("vid").alias("src"), F.col("level").alias("du"))
+    d_v = depth.select(F.col("vid").alias("dst"), F.col("level").alias("dv"))
     # deterministic parent: min neighbor one level up
     parent = (
         adj.join(d_u, "src")
@@ -130,7 +97,8 @@ def bridges(graph: ProjectedGraph, max_iterations: int = 1000) -> BridgesResult:
     nontree = pairs.join(tree, ["src", "dst"], "left_anti")
 
     # covering walk: (eid=(a0,b0), wa, da, wb, db); lift deeper walker(s)
-    walk = (
+    walking = {"rows": F.count(F.lit(1))}
+    walk, m = observed_checkpoint(
         nontree.join(d_u.select(F.col("src"), F.col("du").alias("da")), "src")
         .join(d_v.select(F.col("dst"), F.col("dv").alias("db")), "dst")
         .select(
@@ -141,8 +109,8 @@ def bridges(graph: ProjectedGraph, max_iterations: int = 1000) -> BridgesResult:
             F.col("dst").alias("wb"),
             "db",
         )
-        .filter(F.col("wa") != F.col("wb"))
-        .localCheckpoint(eager=True)
+        .filter(F.col("wa") != F.col("wb")),
+        walking,
     )
     # Per-hop increments are collected and union+distinct'ed ONCE after the
     # loop — re-distincting the full accumulated cover set every hop was
@@ -153,9 +121,7 @@ def bridges(graph: ProjectedGraph, max_iterations: int = 1000) -> BridgesResult:
     pmap_a = parent.select(F.col("vid").alias("wa"), F.col("parent").alias("pa"))
     pmap_b = parent.select(F.col("vid").alias("wb"), F.col("parent").alias("pb"))
     hops = 0
-    while hops < max_iterations:
-        if walk.limit(1).count() == 0:
-            break
+    while m["rows"] and hops < max_iterations:
         lift_a = F.col("da") >= F.col("db")
         lift_b = F.col("db") >= F.col("da")
         stepped = (
@@ -164,10 +130,10 @@ def bridges(graph: ProjectedGraph, max_iterations: int = 1000) -> BridgesResult:
             .select(
                 "ea",
                 "eb",
-                F.when(lift_a, F.col("pa")).otherwise(F.col("wa")).alias("nwa"),
-                F.when(lift_a, F.col("da") - 1).otherwise(F.col("da")).alias("nda"),
-                F.when(lift_b, F.col("pb")).otherwise(F.col("wb")).alias("nwb"),
-                F.when(lift_b, F.col("db") - 1).otherwise(F.col("db")).alias("ndb"),
+                F.when(lift_a, F.col("pa")).otherwise(F.col("wa")).alias("wa"),
+                F.when(lift_a, F.col("da") - 1).otherwise(F.col("da")).alias("da"),
+                F.when(lift_b, F.col("pb")).otherwise(F.col("wb")).alias("wb"),
+                F.when(lift_b, F.col("db") - 1).otherwise(F.col("db")).alias("db"),
                 F.when(lift_a, F.struct(F.least("wa", "pa").alias("src"), F.greatest("wa", "pa").alias("dst"))).alias("ca"),
                 F.when(lift_b, F.struct(F.least("wb", "pb").alias("src"), F.greatest("wb", "pb").alias("dst"))).alias("cb"),
             )
@@ -181,18 +147,14 @@ def bridges(graph: ProjectedGraph, max_iterations: int = 1000) -> BridgesResult:
             .localCheckpoint(eager=True)
         )
         cov_parts.append(step_cov)
-        new_walk = stepped.select(
-            "ea",
-            "eb",
-            F.col("nwa").alias("wa"),
-            F.col("nda").alias("da"),
-            F.col("nwb").alias("wb"),
-            F.col("ndb").alias("db"),
-        ).filter(F.col("wa") != F.col("wb")).localCheckpoint(eager=True)
-        stepped.unpersist()
-        walk.unpersist()
+        new_walk, m = observed_checkpoint(
+            stepped.drop("ca", "cb").filter(F.col("wa") != F.col("wb")), walking
+        )
+        release_checkpoint(stepped)
+        release_checkpoint(walk)
         walk = new_walk
         hops += 1
+    release_checkpoint(walk)
 
     covered = None
     if cov_parts:
@@ -201,7 +163,7 @@ def bridges(graph: ProjectedGraph, max_iterations: int = 1000) -> BridgesResult:
             covered = covered.unionByName(part)
         covered = covered.distinct().localCheckpoint(eager=True)
         for part in cov_parts:
-            part.unpersist()
+            release_checkpoint(part)
 
     out = (
         tree.join(covered.select("src", "dst").distinct(), ["src", "dst"], "left_anti")

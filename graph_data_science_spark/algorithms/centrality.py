@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.plans.messaging import EdgePlan
-from graph_data_science_spark.plans.pregel import run_pregel
+from graph_data_science_spark.plans.pregel import release_checkpoint, run_pregel
 from graph_data_science_spark.projection import ProjectedGraph
 
 
@@ -141,7 +141,13 @@ def hits(
         row = df.agg(F.sqrt(F.sum(F.col(col) * F.col(col))).alias("n")).collect()[0]
         return float(row["n"] or 1.0) or 1.0
 
+    # the last superstep's (auth_raw, hub_raw): the state built from them
+    # is materialized once run_pregel asks for the next step
+    raw: list[DataFrame] = []
+
     def step(state: DataFrame, i: int) -> DataFrame:
+        while raw:
+            release_checkpoint(raw.pop())
         a_msgs = fwd.messages(
             state.select("vid", F.col("hub").alias("val")),
             {"msg": F.col("val")}, {"msg": F.sum("msg")},
@@ -164,6 +170,7 @@ def hits(
             "old_auth", "old_hub",
         ).localCheckpoint(eager=True)
         hn = _l2(hub_raw, "hub_raw")
+        raw.extend((auth_raw, hub_raw))
         return hub_raw.select(
             "vid", "auth", (F.col("hub_raw") / F.lit(hn)).alias("hub"),
             F.greatest(
@@ -177,6 +184,8 @@ def hits(
         metrics={"max_delta": F.coalesce(F.max("delta"), F.lit(0.0))},
         stop_fn=lambda m, i: m["max_delta"] < tolerance,
     )
+    while raw:
+        release_checkpoint(raw.pop())
     fwd.unpersist()
     rev.unpersist()
     return CentralityResult(

@@ -11,11 +11,11 @@ The Spark-first restructuring of CELF: in the live-edge model,
 ``reach(S ∪ {v}) = reach(S) ∪ reach({v})`` on the same world — so the
 expensive part, per-candidate reachability, is computed ONCE for every
 candidate and world together as a single batched multi-source BFS over
-(candidate, world, node) pair state (the same batching as multi-source
-Brandes). The greedy loop then needs only one anti-join aggregate per
-seed chosen — CELF's lazy-queue bookkeeping exists to avoid repeated
-cascade simulations, and batching removes those entirely, giving the
-EXACT same greedy result over the candidate set.
+(candidate, world, node) pair state (``plans.pregel.expand_levels``, the
+same batching as multi-source Brandes). The greedy loop then needs only
+one anti-join aggregate per seed chosen — CELF's lazy-queue bookkeeping
+exists to avoid repeated cascade simulations, and batching removes those
+entirely, giving the EXACT same greedy result over the candidate set.
 
 Candidates default to the ``candidate_pool`` highest-out-degree nodes
 (ties → min vid) — the standard practical restriction; the pair state is
@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from graph_data_science_spark.plans.pregel import release_checkpoint
+from graph_data_science_spark.plans.pregel import expand_levels, release_checkpoint
 from graph_data_science_spark.projection import ProjectedGraph
 
 
@@ -85,34 +85,16 @@ def celf_influence_maximization(
     )
     # batched BFS: (cand, sim, vid) ← every candidate × world at once
     sims = spark.range(mc_simulations).select(F.col("id").cast("int").alias("sim"))
-    settled = (
-        cands.crossJoin(sims)
-        .select("cand", "sim", F.col("cand").alias("vid"))
-        .localCheckpoint(eager=True)
+    by_vid = live.select("sim", F.col("src").alias("vid"), "dst")
+    reach, _ = expand_levels(  # (cand, sim, vid, level)
+        cands.crossJoin(sims).select("cand", "sim", F.col("cand").alias("vid")),
+        lambda frontier: frontier.join(by_vid, ["vid", "sim"]).select(
+            "cand", "sim", F.col("dst").alias("vid")
+        ),
+        ["cand", "sim", "vid"],
+        max_iterations,
     )
-    frontier = settled
-    for _ in range(max_iterations):
-        nxt = (
-            frontier.join(
-                live, (frontier["vid"] == live["src"]) & (frontier["sim"] == live["sim"])
-            )
-            .select("cand", frontier["sim"].alias("sim"), F.col("dst").alias("vid"))
-            .distinct()
-            .join(settled, ["cand", "sim", "vid"], "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if nxt.limit(1).count() == 0:
-            release_checkpoint(nxt)
-            break
-        new_settled = settled.unionByName(nxt).localCheckpoint(eager=True)
-        release_checkpoint(settled)
-        if frontier is not settled:
-            release_checkpoint(frontier)
-        frontier, settled = nxt, new_settled
-    if frontier is not settled:
-        release_checkpoint(frontier)
     live.unpersist()
-    reach = settled  # (cand, sim, vid)
 
     # greedy over the batched reachabilities: marginal(v | S) =
     # |reach_v \ reach_S| summed over worlds — one anti-join agg per pick

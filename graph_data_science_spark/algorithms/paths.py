@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.plans.messaging import EdgePlan
-from graph_data_science_spark.plans.pregel import release_checkpoint, run_pregel
+from graph_data_science_spark.plans.pregel import expand_levels, release_checkpoint, run_pregel
 from graph_data_science_spark.projection import ProjectedGraph
 
 _INF = float("inf")
@@ -760,10 +760,11 @@ def all_pairs_hops(
     graph: ProjectedGraph, sources: DataFrame | None = None, max_iterations: int = 1000
 ) -> DataFrame:
     """Multi-source BFS: hop distances for every (source, node) pair in
-    ONE superstep loop (the reference's MS-BFS idea, relationally:
-    the frontier is (src, vid) pairs instead of per-source bitsets).
-    → (src, vid, hops). ``sources=None`` uses every node (exact
-    all-pairs; state is O(n · reach) — sample sources at scale).
+    ONE level loop (``plans.pregel.expand_levels`` — the reference's
+    MS-BFS idea, relationally: the frontier is (src, vid) pairs instead
+    of per-source bitsets). → (src, vid, hops). ``sources=None`` uses
+    every node (exact all-pairs; state is O(n · reach) — sample sources
+    at scale).
     """
     from pyspark.storagelevel import StorageLevel
 
@@ -772,35 +773,16 @@ def all_pairs_hops(
     edges.count()
     if sources is None:
         sources = graph.nodes.select("vid")
-    settled = sources.select(
-        F.col("vid").alias("src"), F.col("vid").alias("vid"), F.lit(0).alias("hops")
-    ).localCheckpoint(eager=True)
-    frontier = settled
-    d = 0
-    while d < max_iterations:
-        nxt = (
-            frontier.join(edges, frontier["vid"] == edges["u"])
-            .select("src", F.col("v").alias("vid"))
-            .distinct()
-            .join(settled.select("src", "vid"), ["src", "vid"], "left_anti")
-            .withColumn("hops", F.lit(d + 1))
-            .localCheckpoint(eager=True)
-        )
-        if nxt.limit(1).count() == 0:
-            release_checkpoint(nxt)
-            break
-        new_settled = settled.unionByName(nxt).localCheckpoint(eager=True)
-        release_checkpoint(settled)
-        if frontier is not settled:
-            release_checkpoint(frontier)  # the previous round's nxt, now folded in
-        # nxt stays persisted one more round (it is the next frontier).
-        frontier = nxt
-        settled = new_settled
-        d += 1
-    if frontier is not settled:
-        release_checkpoint(frontier)
+    settled, _ = expand_levels(
+        sources.select(F.col("vid").alias("src"), "vid"),
+        lambda frontier: frontier.join(edges, frontier["vid"] == edges["u"]).select(
+            "src", F.col("v").alias("vid")
+        ),
+        ["src", "vid"],
+        max_iterations,
+    )
     edges.unpersist()
-    return settled
+    return settled.withColumnRenamed("level", "hops")
 
 
 def all_pairs_distances(

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from graph_data_science_spark.plans.pregel import observed_checkpoint, release_checkpoint
 from graph_data_science_spark.projection import ProjectedGraph, undirect_edges
 
 
@@ -59,9 +60,10 @@ def minimum_spanning_forest(graph: ProjectedGraph) -> SpanningForestResult:
     comp = graph.nodes.select("vid", F.col("vid").alias("comp")).localCheckpoint(
         eager=True
     )
-    chosen = None
+    chosen = graph.nodes.sparkSession.createDataFrame(
+        [], "lo long, hi long, weight double"
+    ).localCheckpoint(eager=True)
     phases = 0
-    spark = graph.nodes.sparkSession
     while True:
         phases += 1
         cl = comp.select(F.col("vid").alias("lo"), F.col("comp").alias("c_lo"))
@@ -72,7 +74,7 @@ def minimum_spanning_forest(graph: ProjectedGraph) -> SpanningForestResult:
             .filter(F.col("c_lo") != F.col("c_hi"))
         )
         # min outgoing edge per component, from both endpoints' views
-        picks = (
+        picks, m = observed_checkpoint(
             live.select(F.col("c_lo").alias("c"), "weight", "lo", "hi")
             .unionByName(live.select(F.col("c_hi").alias("c"), "weight", "lo", "hi"))
             .groupBy("c")
@@ -82,13 +84,12 @@ def minimum_spanning_forest(graph: ProjectedGraph) -> SpanningForestResult:
                 F.col("m.hi").alias("hi"),
                 F.col("m.weight").alias("weight"),
             )
-            .distinct()
-            .localCheckpoint(eager=True)
+            .distinct(),
+            {"rows": F.count(F.lit(1))},
         )
-        if picks.limit(1).count() == 0:
+        if m["rows"] == 0:
+            release_checkpoint(picks)
             break
-        chosen = picks if chosen is None else chosen.unionByName(picks).distinct()
-        chosen = chosen.localCheckpoint(eager=True)
         # merge components: WCC over the component graph induced by picks
         merge_edges = (
             picks.join(cl, "lo")
@@ -111,16 +112,20 @@ def minimum_spanning_forest(graph: ProjectedGraph) -> SpanningForestResult:
             edge_count=0,
         )
         merged = wcc(mg).components  # (vid = old comp, component = new comp)
-        comp = (
+        new_comp = (
             comp.join(
                 merged.select(F.col("vid").alias("comp"), "component"), "comp"
             )
             .select("vid", F.col("component").alias("comp"))
             .localCheckpoint(eager=True)
         )
+        # no edge is picked twice: its phase merges its endpoints' components
+        new_chosen = chosen.unionByName(picks).localCheckpoint(eager=True)
+        for df in (comp, chosen, picks):
+            release_checkpoint(df)
+        comp, chosen = new_comp, new_chosen
+    release_checkpoint(comp)
     edges.unpersist()
-    if chosen is None:
-        chosen = spark.createDataFrame([], "lo long, hi long, weight double")
     total = chosen.agg(F.sum("weight")).collect()[0][0]
     out = chosen.select(
         F.col("lo").alias("src"), F.col("hi").alias("dst"), "weight"
@@ -178,9 +183,11 @@ def k_spanning_tree(
         if not pick:
             break
         p = pick[0]
-        tree = tree.filter(
+        trimmed = tree.filter(
             ~((F.col("src") == p["src"]) & (F.col("dst") == p["dst"]))
         ).localCheckpoint(eager=True)
+        release_checkpoint(tree)
+        tree = trimmed
     total = tree.agg(F.sum("weight")).collect()[0][0]
     return SpanningForestResult(
         edges=tree, total_weight=float(total or 0.0), phases=msf.phases

@@ -21,6 +21,11 @@ aggregate columns observed (``DataFrame.observe``) on the checkpoint that
 materializes the superstep, so they cost no extra job; ``stop_fn``
 decides halting from them. Durable checkpoints (resume mid-iteration) go
 through a ``CheckpointStore`` every ``checkpoint_every`` supersteps.
+
+``expand_levels`` is the multi-source BFS loop (MS-BFS, Then et al.,
+VLDB 2014) with the same release rules. It stays adaptive: a checkpoint
+keeps the size estimate of the plan it materialized, which every level's
+join multiplies, so static planning would pick sort-merge joins.
 """
 
 from __future__ import annotations
@@ -31,6 +36,7 @@ from dataclasses import dataclass, field
 
 from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from graph_data_science_spark.plans.checkpoint import CheckpointStore
 
@@ -91,6 +97,42 @@ def observed_checkpoint(df: DataFrame, metrics: dict[str, Column]) -> tuple[Data
     obs = Observation()
     done = df.observe(obs, *[c.alias(k) for k, c in metrics.items()]).localCheckpoint(eager=True)
     return done, dict(obs.get)
+
+
+def expand_levels(
+    seed: DataFrame, expand: Callable[[DataFrame], DataFrame], keys: list[str], max_levels: int
+) -> tuple[DataFrame, int]:
+    """Level-synchronous BFS from every row of ``seed`` → ``(settled, depth)``.
+
+    ``expand(frontier)`` returns the rows one hop out of the last level,
+    with ``seed``'s columns; duplicates and rows whose ``keys`` an earlier
+    level settled are dropped. Each level is one checkpoint with its row
+    count observed on it; an empty level ends the loop. ``settled`` (seed
+    columns plus ``level``, 0 for the seed) is the only checkpoint left
+    persisted; ``depth`` is its deepest level, at most ``max_levels``.
+    """
+    cols = seed.columns
+    settled = seed.select(*cols, F.lit(0).alias("level")).localCheckpoint(eager=True)
+    frontier, depth = settled, 0
+    while depth < max_levels:
+        nxt, m = observed_checkpoint(
+            expand(frontier).select(*cols).distinct()
+            .join(settled.select(*keys), keys, "left_anti")
+            .withColumn("level", F.lit(depth + 1)),
+            {"rows": F.count(F.lit(1))},
+        )
+        if m["rows"] == 0:
+            release_checkpoint(nxt)
+            break
+        new_settled = settled.unionByName(nxt).localCheckpoint(eager=True)
+        release_checkpoint(settled)
+        if frontier is not settled:
+            release_checkpoint(frontier)  # the previous level, now in settled
+        frontier, settled = nxt, new_settled
+        depth += 1
+    if frontier is not settled:
+        release_checkpoint(frontier)
+    return settled, depth
 
 
 def run_pregel(

@@ -9,6 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.algorithms.betweenness import betweenness
+from graph_data_science_spark.algorithms.bridges import bridges
+from graph_data_science_spark.algorithms.centrality import hits
 from graph_data_science_spark.algorithms.coloring import k1coloring
 from graph_data_science_spark.algorithms.hashgnn import hash_gnn
 from graph_data_science_spark.algorithms.influence import celf_influence_maximization
@@ -22,9 +24,10 @@ from graph_data_science_spark.algorithms.paths import (
 )
 from graph_data_science_spark.algorithms.scc import scc
 from graph_data_science_spark.algorithms.sllpa import sllpa
+from graph_data_science_spark.algorithms.spanning import minimum_spanning_forest
 from graph_data_science_spark.algorithms.triangles import triangle_count
 from graph_data_science_spark.algorithms.wcc import wcc
-from graph_data_science_spark.plans.pregel import release_checkpoint, run_pregel
+from graph_data_science_spark.plans.pregel import expand_levels, release_checkpoint, run_pregel
 from graph_data_science_spark.projection import project
 
 from tests import fixtures, oracles
@@ -104,8 +107,7 @@ def _hash_gnn(g):
 
 
 def _betweenness(g):
-    # the per-node sums of doubles may differ in the last bit between runs
-    return betweenness(g).scores.select("vid", F.round("score", 9))
+    return betweenness(g).scores
 
 
 # (run, undirected projection, result has one row per node, bound on
@@ -142,6 +144,15 @@ def _betweenness(g):
             lambda g: celf_influence_maximization(g).seeds, False, False, 0, id="celf"
         ),
         pytest.param(_betweenness, False, True, 1, id="betweenness"),
+        pytest.param(lambda g: hits(g).scores, False, True, 1, id="hits"),
+        # the chosen edges, and WCC's last round of each of the two merge
+        # phases: a WCC result has no handle to free it by yet
+        pytest.param(
+            lambda g: minimum_spanning_forest(g).edges, True, False, 3, id="spanning_forest"
+        ),
+        # WCC's last round, the BFS levels and the covering pairs stay:
+        # the lazy result and articulation_points read them
+        pytest.param(lambda g: bridges(g).bridges, True, False, 3, id="bridges"),
     ],
 )
 def test_superstep_algorithms_keep_one_checkpoint(spark, run, undirected, per_node, bound):
@@ -158,6 +169,46 @@ def test_superstep_algorithms_keep_one_checkpoint(spark, run, undirected, per_no
         assert len(first) == len(nodes)
     else:
         assert first
+
+
+def _bfs(spark, seed, edges, max_levels):
+    """expand_levels over (src, vid) pairs along (u, v) edges; each call
+    leaves at most its result persisted. → ({(src, vid): level}, depth)."""
+    edge_df = spark.createDataFrame(edges, "u long, v long")
+    before = _persisted(spark)
+    settled, depth = expand_levels(
+        spark.createDataFrame(seed, "src long, vid long"),
+        lambda f: f.join(edge_df, f["vid"] == edge_df["u"]).select(
+            "src", F.col("v").alias("vid")
+        ),
+        ["src", "vid"],
+        max_levels,
+    )
+    assert len(_persisted(spark) - before) <= 1
+    return {(r["src"], r["vid"]): r["level"] for r in settled.collect()}, depth
+
+
+def test_expand_levels_settles_each_pair_once(spark):
+    # 3 → 1 leads back to a level 1 already settled for source 0; from
+    # source 2 it closes the cycle 2 → 3 → 1 → 2.
+    edges = [(0, 1), (1, 2), (2, 3), (3, 1)]
+    levels, depth = _bfs(spark, [(0, 0), (2, 2)], edges, 10)
+    assert levels == {
+        (0, 0): 0, (0, 1): 1, (0, 2): 2, (0, 3): 3,
+        (2, 2): 0, (2, 3): 1, (2, 1): 2,
+    }
+    assert depth == 3
+
+
+def test_expand_levels_empty_first_level(spark):
+    levels, depth = _bfs(spark, [(5, 5)], [(0, 1)], 10)
+    assert (levels, depth) == ({(5, 5): 0}, 0)
+
+
+def test_expand_levels_stops_at_max_levels(spark):
+    chain = [(i, i + 1) for i in range(5)]
+    levels, depth = _bfs(spark, [(0, 0)], chain, 2)
+    assert (levels, depth) == ({(0, 0): 0, (0, 1): 1, (0, 2): 2}, 2)
 
 
 def test_release_checkpoint_rejects_a_derived_frame(spark):
