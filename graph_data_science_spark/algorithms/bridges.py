@@ -73,7 +73,6 @@ def bridges(graph: ProjectedGraph, max_iterations: int = 1000) -> BridgesResult:
         lambda frontier: frontier.join(adj, frontier["vid"] == adj["src"]).select(
             F.col("dst").alias("vid")
         ),
-        ["vid"],
         max_iterations,
     )
     d_u = depth.select(F.col("vid").alias("src"), F.col("level").alias("du"))
@@ -124,6 +123,8 @@ def bridges(graph: ProjectedGraph, max_iterations: int = 1000) -> BridgesResult:
     while m["rows"] and hops < max_iterations:
         lift_a = F.col("da") >= F.col("db")
         lift_b = F.col("db") >= F.col("da")
+        # ca/cb read the pre-lift wa/wb: a name in a select resolves to
+        # its input's column before any alias made in the same select
         stepped = (
             walk.join(pmap_a, "wa", "left")
             .join(pmap_b, "wb", "left")

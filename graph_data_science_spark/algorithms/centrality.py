@@ -141,13 +141,13 @@ def hits(
         row = df.agg(F.sqrt(F.sum(F.col(col) * F.col(col))).alias("n")).collect()[0]
         return float(row["n"] or 1.0) or 1.0
 
-    # the last superstep's (auth_raw, hub_raw): the state built from them
-    # is materialized once run_pregel asks for the next step
-    raw: list[DataFrame] = []
+    # the last superstep's hub_raw: the state built from it is
+    # materialized once run_pregel asks for the next step
+    prev_hub: list[DataFrame] = []
 
     def step(state: DataFrame, i: int) -> DataFrame:
-        while raw:
-            release_checkpoint(raw.pop())
+        if prev_hub:
+            release_checkpoint(prev_hub.pop())
         a_msgs = fwd.messages(
             state.select("vid", F.col("hub").alias("val")),
             {"msg": F.col("val")}, {"msg": F.sum("msg")},
@@ -169,8 +169,9 @@ def hits(
             "vid", "auth", F.coalesce("msg", F.lit(0.0)).alias("hub_raw"),
             "old_auth", "old_hub",
         ).localCheckpoint(eager=True)
+        release_checkpoint(auth_raw)  # only hub_raw's plan read it
         hn = _l2(hub_raw, "hub_raw")
-        raw.extend((auth_raw, hub_raw))
+        prev_hub.append(hub_raw)
         return hub_raw.select(
             "vid", "auth", (F.col("hub_raw") / F.lit(hn)).alias("hub"),
             F.greatest(
@@ -184,8 +185,8 @@ def hits(
         metrics={"max_delta": F.coalesce(F.max("delta"), F.lit(0.0))},
         stop_fn=lambda m, i: m["max_delta"] < tolerance,
     )
-    while raw:
-        release_checkpoint(raw.pop())
+    if prev_hub:  # empty when max_iterations is 0
+        release_checkpoint(prev_hub.pop())
     fwd.unpersist()
     rev.unpersist()
     return CentralityResult(

@@ -91,7 +91,6 @@ def celf_influence_maximization(
         lambda frontier: frontier.join(by_vid, ["vid", "sim"]).select(
             "cand", "sim", F.col("dst").alias("vid")
         ),
-        ["cand", "sim", "vid"],
         max_iterations,
     )
     live.unpersist()

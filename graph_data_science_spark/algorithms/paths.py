@@ -778,7 +778,6 @@ def all_pairs_hops(
         lambda frontier: frontier.join(edges, frontier["vid"] == edges["u"]).select(
             "src", F.col("v").alias("vid")
         ),
-        ["src", "vid"],
         max_iterations,
     )
     edges.unpersist()

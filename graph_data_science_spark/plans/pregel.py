@@ -100,16 +100,16 @@ def observed_checkpoint(df: DataFrame, metrics: dict[str, Column]) -> tuple[Data
 
 
 def expand_levels(
-    seed: DataFrame, expand: Callable[[DataFrame], DataFrame], keys: list[str], max_levels: int
+    seed: DataFrame, expand: Callable[[DataFrame], DataFrame], max_levels: int
 ) -> tuple[DataFrame, int]:
     """Level-synchronous BFS from every row of ``seed`` → ``(settled, depth)``.
 
     ``expand(frontier)`` returns the rows one hop out of the last level,
-    with ``seed``'s columns; duplicates and rows whose ``keys`` an earlier
-    level settled are dropped. Each level is one checkpoint with its row
-    count observed on it; an empty level ends the loop. ``settled`` (seed
-    columns plus ``level``, 0 for the seed) is the only checkpoint left
-    persisted; ``depth`` is its deepest level, at most ``max_levels``.
+    with ``seed``'s columns; duplicates and rows an earlier level settled
+    are dropped. Each level is one checkpoint with its row count observed
+    on it; an empty level ends the loop. ``settled`` (seed columns plus
+    ``level``, 0 for the seed) is the only checkpoint left persisted;
+    ``depth`` is its deepest level, at most ``max_levels``.
     """
     cols = seed.columns
     settled = seed.select(*cols, F.lit(0).alias("level")).localCheckpoint(eager=True)
@@ -117,7 +117,7 @@ def expand_levels(
     while depth < max_levels:
         nxt, m = observed_checkpoint(
             expand(frontier).select(*cols).distinct()
-            .join(settled.select(*keys), keys, "left_anti")
+            .join(settled.select(*cols), cols, "left_anti")
             .withColumn("level", F.lit(depth + 1)),
             {"rows": F.count(F.lit(1))},
         )

@@ -145,11 +145,6 @@ def _betweenness(g):
         ),
         pytest.param(_betweenness, False, True, 1, id="betweenness"),
         pytest.param(lambda g: hits(g).scores, False, True, 1, id="hits"),
-        # the chosen edges, and WCC's last round of each of the two merge
-        # phases: a WCC result has no handle to free it by yet
-        pytest.param(
-            lambda g: minimum_spanning_forest(g).edges, True, False, 3, id="spanning_forest"
-        ),
         # WCC's last round, the BFS levels and the covering pairs stay:
         # the lazy result and articulation_points read them
         pytest.param(lambda g: bridges(g).bridges, True, False, 3, id="bridges"),
@@ -171,6 +166,23 @@ def test_superstep_algorithms_keep_one_checkpoint(spark, run, undirected, per_no
         assert first
 
 
+def test_spanning_forest_keeps_chosen_and_one_wcc_round_per_merge(spark):
+    # Every phase but the last (which picks no edge) merges components with
+    # WCC, whose last round stays persisted: a WCC result has no handle to
+    # free it by yet. So a call leaves the chosen edges plus one round per
+    # merge phase, and a leak per phase would exceed the bound.
+    nodes, edges = fixtures.powerlaw(300, 900, seed=11)
+    g = _project(spark, nodes, edges, orientation="UNDIRECTED")
+    results = []
+    for _ in range(2):
+        before = _persisted(spark)
+        msf = minimum_spanning_forest(g)
+        assert msf.phases >= 2
+        assert len(_persisted(spark) - before) <= 1 + (msf.phases - 1)
+        results.append({tuple(r) for r in msf.edges.collect()})
+    assert results[0] == results[1] and results[0]
+
+
 def _bfs(spark, seed, edges, max_levels):
     """expand_levels over (src, vid) pairs along (u, v) edges; each call
     leaves at most its result persisted. → ({(src, vid): level}, depth)."""
@@ -181,7 +193,6 @@ def _bfs(spark, seed, edges, max_levels):
         lambda f: f.join(edge_df, f["vid"] == edge_df["u"]).select(
             "src", F.col("v").alias("vid")
         ),
-        ["src", "vid"],
         max_levels,
     )
     assert len(_persisted(spark) - before) <= 1
